@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: attribute the ANN-rebuild straggler IngestStress found
@@ -15,10 +14,7 @@ import org.apache.spark.sql.functions._
 object AnnRebuildProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val df = spark.read.parquet(dir)
     println(s"rows=${df.count()} cols=${df.columns.mkString(",")}")

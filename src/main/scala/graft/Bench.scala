@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Benchmark main: runs the headline queries (Registry entries flagged
@@ -12,22 +11,7 @@ import graft.queries.Registry
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // external bucketed tables carry their own path; this only keeps the
-      // (otherwise empty) default warehouse dir out of the repo checkout
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val spark = graft.core.GraftSession.local()
 
     val headline = {
       val flagged = Registry.all.filter(_.bench)
@@ -46,10 +30,11 @@ object Bench {
     // data work), which a long-lived cluster pays once, not per query. The
     // timed pass below then measures steady-state execution. The
     // releaseAllBlocks() between the passes (and after every timed query)
-    // drops persist()ed intermediates AND localCheckpoint blocks (which the
-    // CacheManager never tracks — left alone they accumulate over the warm
-    // pass and squeeze execution memory for the first timed queries), so
-    // each timed query does ALL its data work from a clean BlockManager.
+    // is the harness end of the Materialize scope contract: it frees what
+    // each builder's unclosed harness scope persisted or checkpointed
+    // (left alone those blocks accumulate over the warm pass and squeeze
+    // execution memory for the first timed queries), so each timed query
+    // does ALL its data work from a clean BlockManager.
     headline.foreach { q =>
       try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }

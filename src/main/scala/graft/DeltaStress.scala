@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{StealSampler, TaskMetricsCollector}
+import graft.core.{Materialize, StealSampler, TaskMetricsCollector}
 import graft.store.CleanStateStore
 
 /** Does d_delta_pipeline's cost follow the BATCH or the accumulated state?
@@ -35,16 +35,8 @@ object DeltaStress {
     val baseDir = args(0)
     val workDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.GraftSession.quietNoisyLoggers()
 
     val permute = udf { (text: String, salt: Long) =>
       val ws = text.split("\\s+")
@@ -112,14 +104,14 @@ object DeltaStress {
       } else println(s"x$k state reused: stageCounts=${st.stageCounts()}")
       val full = stored(k).union(batch)
       timed(s"x$k delta") {
-        val (r, release) = st.applyBatchReleasable(batch, full, hold)
-        try { r.finalNew.count(): Unit; r.revoked.count(): Unit }
-        finally release()
+        Materialize { m =>
+          val r = st.applyBatch(m, batch, full, hold)
+          r.finalNew.count(): Unit; r.revoked.count(): Unit
+        }
       }
       timed(s"x$k survivors") {
-        val (r, release) = st.applyBatchReleasable(batch, full, hold)
-        try r.survivors.write.format("noop").mode("overwrite").save()
-        finally release()
+        Materialize(m => st.applyBatch(m, batch, full, hold)
+          .survivors.write.format("noop").mode("overwrite").save())
       }
     }
     spark.stop()

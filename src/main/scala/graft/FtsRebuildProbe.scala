@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Scratch probe: the FTS rebuild is the slowest index job at 200k docs
   * (25.3 s vs ANN's 20.1 s, r17 ingest attribution). Its postings and
@@ -14,10 +13,7 @@ import org.apache.spark.sql.SparkSession
 object FtsRebuildProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val df = spark.read.parquet(dir)
     println(s"rows=${df.count()}")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 import graft.chunker.{MaxMinChunker, SentenceSplitter}
 import graft.embed.HashedEmbedder
@@ -16,10 +15,7 @@ object IngestProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val n = if (args.length > 1) args(1).toInt else 2000
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val texts = graft.core.Tables.documents(spark, sfDir)
       .select("text").limit(n).collect().map(_.getString(0)).toSeq

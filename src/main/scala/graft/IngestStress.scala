@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** TEXT-leg ingest stress — the RasterStress twin for the flagship WRITE
   * path (r15 VERDICT ask #1): parse → sentence split → Max-Min chunker →
@@ -132,18 +131,10 @@ object IngestStress {
   def main(args: Array[String]): Unit = {
     val workDir = args(0)
     val numDocs = if (args.length > 1) args(1).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.local()
+    spark.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
 
     // ---- stage: N mixed files, written DISTRIBUTED (the RasterStress
     // pattern — each task materializes its id range; ~1000 files per
@@ -154,7 +145,7 @@ object IngestStress {
     if (!marker.exists()) {
       val t0 = System.nanoTime()
       val base = docsDir.getAbsolutePath
-      spark.range(numDocs).repartition(cpus.toInt * 4)
+      spark.range(numDocs).repartition(cpus * 4)
         .foreachPartition { (it: Iterator[java.lang.Long]) =>
           it.foreach { boxed =>
             val id = boxed.longValue()
@@ -217,7 +208,7 @@ object IngestStress {
       if (times.isEmpty) 0L
       else times(math.min(times.size - 1, (p * times.size).toInt))
     val sumTaskSec = times.sum / 1e3
-    val eff = if (times.isEmpty) 0.0 else sumTaskSec / (wall * cpus.toInt)
+    val eff = if (times.isEmpty) 0.0 else sumTaskSec / (wall * cpus)
     System.err.println(
       f"[ingest-stress] docs=$numDocs upserted=${summary.upserted} " +
       f"empty=${summary.empty} wall=$wall%.1fs resync=$rewall%.1fs " +

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Materialize
 
 /** Scratch probe: where does d_corpus_pipeline's wall go — the scan, the
   * quality projection, the fingerprint groupBy, the LSH+verify leg, or the
@@ -23,14 +24,8 @@ import org.apache.spark.sql.functions._
 object PipelineProbe {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.GraftSession.quietNoisyLoggers()
 
     val collector = new graft.core.TaskMetricsCollector
     spark.sparkContext.addSparkListener(collector)
@@ -47,16 +42,16 @@ object PipelineProbe {
     }
 
     def corpus = graft.queries.DedupQueries.dupCorpus(spark, d)
-    def funnel() = graft.ops.CleanCorpus.cleanCorpusReleasable(
-      corpus, "doc_id", "text", isHoldout = Some(col("doc_id") % 97 === 0))
+    // one funnel per run, its caches freed when the run's scope closes
+    def funnel[T](consume: graft.ops.CleanCorpusStages => T): T =
+      Materialize(m => consume(graft.ops.CleanCorpus.cleanCorpus(m,
+        corpus, "doc_id", "text", isHoldout = Some(col("doc_id") % 97 === 0))))
 
     t("raw_scan_count") { corpus.count(): Unit }
     // cum2 sub-decomposition: the funnel's BUILD is not free when a holdout
     // predicate is given (the decontamination broadcast's limit-probe runs
     // eagerly, r16), and the quality frame persists — separate the three
-    t("build_only_holdout") {
-      val (_, rel) = funnel(); rel()
-    }
+    t("build_only_holdout") { funnel(_ => ()) }
     t("quality_filter_nocache") {
       val g = graft.ops.TextAnalysis.gopherRules(col("text"))
       corpus.filter(g.getField("n_words").between(20, 100000) &&
@@ -65,45 +60,36 @@ object PipelineProbe {
         g.getField("ellipsis_ratio") <= 0.3).count(): Unit
     }
     t("cum2_quality_noholdout") {
-      val (st, rel) = graft.ops.CleanCorpus.cleanCorpusReleasable(
-        corpus, "doc_id", "text")
-      st.quality.count(): Unit; rel()
+      Materialize(m => graft.ops.CleanCorpus.cleanCorpus(m, corpus, "doc_id", "text")
+        .quality.count(): Unit)
     }
-    t("cum2_quality") {
-      val (st, rel) = funnel(); st.quality.count(): Unit; rel()
-    }
-    t("cum3_exact") {
-      val (st, rel) = funnel(); st.exactDeduped.count(): Unit; rel()
-    }
-    t("cum4_near") {
-      val (st, rel) = funnel(); st.nearDeduped.count(): Unit; rel()
-    }
-    t("cum5_decon") {
-      val (st, rel) = funnel(); st.decontaminated.count(): Unit; rel()
-    }
+    t("cum2_quality") { funnel(_.quality.count(): Unit) }
+    t("cum3_exact") { funnel(_.exactDeduped.count(): Unit) }
+    t("cum4_near") { funnel(_.nearDeduped.count(): Unit) }
+    t("cum5_decon") { funnel(_.decontaminated.count(): Unit) }
     // stage-5 marginal cost on WARM caches: the re-derive the verdict
     // flagged (stage counts 4 and 5 both re-evaluate nearShingled's anti
     // join off the persisted exactShingled + pair list)
     t("warm_near_then_decon") {
-      val (st, rel) = funnel()
-      st.nearDeduped.count(): Unit
-      val t0 = System.nanoTime()
-      st.decontaminated.count(): Unit
-      println(f"  (decon marginal: ${(System.nanoTime() - t0) / 1e9}%.2f s)")
-      rel()
+      funnel { st =>
+        st.nearDeduped.count(): Unit
+        val t0 = System.nanoTime()
+        st.decontaminated.count(): Unit
+        println(f"  (decon marginal: ${(System.nanoTime() - t0) / 1e9}%.2f s)")
+      }
     }
     // the registry query's exact shape: all five counts, one funnel
     t("full_query_5counts") {
-      val (st, rel) = funnel()
       def stage(name: String, df: org.apache.spark.sql.DataFrame) =
         df.agg(count(lit(1)).as("docs")).select(lit(name).as("stage"), col("docs"))
-      stage("1_raw", st.corpus)
-        .union(stage("2_quality", st.quality))
-        .union(stage("3_exact_dedup", st.exactDeduped))
-        .union(stage("4_near_dedup", st.nearDeduped))
-        .union(stage("5_decontaminated", st.decontaminated))
-        .orderBy("stage").collect(): Unit
-      rel()
+      funnel { st =>
+        stage("1_raw", st.corpus)
+          .union(stage("2_quality", st.quality))
+          .union(stage("3_exact_dedup", st.exactDeduped))
+          .union(stage("4_near_dedup", st.nearDeduped))
+          .union(stage("5_decontaminated", st.decontaminated))
+          .orderBy("stage").collect(): Unit
+      }
     }
     spark.stop()
   }

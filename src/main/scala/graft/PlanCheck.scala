@@ -8,7 +8,7 @@ import graft.queries.Registry
   */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.local(8)
+    val spark = graft.core.GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("s2_predicate_scan", "q3_topk_join", "q5_region_revenue",

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** S6 raster-leg ingest stress: stages N fixture PDFs (the s6 14-class
@@ -46,18 +45,10 @@ object RasterStress {
   def main(args: Array[String]): Unit = {
     val workDir = args(0)
     val numDocs = if (args.length > 1) args(1).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.GraftSession.quietNoisyLoggers()
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.local()
+    spark.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
 
     // ---- stage: N fixture PDFs as real files, written DISTRIBUTED (each
     // task materializes its id range; ~1000 files per subdir keeps the
@@ -68,7 +59,7 @@ object RasterStress {
     if (!marker.exists()) {
       val t0 = System.nanoTime()
       val base = pdfDir.getAbsolutePath
-      spark.range(numDocs).repartition(cpus.toInt * 4)
+      spark.range(numDocs).repartition(cpus * 4)
         .foreachPartition { (it: Iterator[java.lang.Long]) =>
           it.foreach { boxed =>
             val id = boxed.longValue()
@@ -122,7 +113,7 @@ object RasterStress {
     val sumTaskSec = times.sum / 1e3
     val nImages = byCodec.map(_.getLong(1)).sum
     val sumLuma = byCodec.map(_.getLong(3)).sum
-    val eff = sumTaskSec / (wall * cpus.toInt)
+    val eff = sumTaskSec / (wall * cpus)
     System.err.println(
       f"[raster-stress] docs=$numDocs images=$nImages wall=$wall%.1fs " +
       f"tasks=${times.size} taskMs min=${times.headOption.getOrElse(0L)} " +

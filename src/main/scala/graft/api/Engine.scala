@@ -7,7 +7,7 @@ import java.util.Base64
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{PathKeys, ScopeMatch}
+import graft.core.{Materialize, PathKeys, ScopeMatch}
 import graft.embed.{Embedder, HashedEmbedder}
 import graft.ingest.{DirectoryScanner, Ingest}
 import graft.search.{Bm25, HybridSearch}
@@ -703,19 +703,16 @@ final class Engine(
         s => s("text")), " ").as("text"))
       .withColumn("file_id", graft.ops.Dedup.hash60(col("filePath")))
       .persist()
-    // releasable verify (r13 soak finding): the handle-less pair verify
-    // persisted its candidate list per CALL — one leaked block per tool
-    // invocation for the session's lifetime. The checkpoint is eager, so
-    // every intermediate releases in the finally; the checkpoint itself
-    // rotates per API name below.
-    var release: () => Unit = () => ()
-    try {
+    // the verify's candidate list is scoped to this call (r13 soak
+    // finding: one leaked block per tool invocation otherwise). The
+    // checkpoint is eager, so every intermediate releases when the scope
+    // closes; the checkpoint itself rotates per API name below.
+    try Materialize { m =>
       val withSh = perFile
         .withColumn("ws", graft.ops.Dedup.wordsArray("text"))
         .withColumn("shs", graft.ops.Dedup.wordShingles("ws", 5))
-      val (pairs, rel) = graft.ops.Dedup.nearDupPairsAtReleasable(
+      val pairs = graft.ops.Dedup.nearDupPairsAt(m,
         withSh.select(col("file_id"), col("shs")), "file_id", "shs", threshold)
-      release = rel
       val ids = perFile.select(col("file_id"), col("filePath"))
       checkpointBounded("nearDuplicateFiles", pairs
         .join(ids.select(col("file_id").as("id_a"), col("filePath").as("pa")), Seq("id_a"))
@@ -723,7 +720,7 @@ final class Engine(
         .select(least(col("pa"), col("pb")).as("path_a"),
           greatest(col("pa"), col("pb")).as("path_b"), col("jaccard"))
         .orderBy("path_a", "path_b"))
-    } finally { release(); perFile.unpersist(): Unit }
+    } finally perFile.unpersist(): Unit
   }
 
   /** Live materialized result per API NAME — the blocks bound on the
@@ -734,13 +731,13 @@ final class Engine(
     * one per call. Same lifecycle contract: a returned DataFrame is valid
     * until the SAME tool runs again. */
   private val liveCheckpoints =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[org.apache.spark.rdd.RDD[_]]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Materialize]()
   private def checkpointBounded(name: String,
                                 df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cp = df.localCheckpoint(true)
-    val mine = graft.ops.Dedup.checkpointRdd(cp)
-    val prev = liveCheckpoints.put(name, mine)
-    if (prev != null) prev.foreach(_.unpersist(blocking = true))
+    val m = new Materialize
+    val cp = m.checkpoint(df)
+    val prev = liveCheckpoints.put(name, m)
+    if (prev != null) prev.close()
     cp
   }
 

@@ -3,9 +3,9 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the settings we want everywhere (tests, bench,
-  * verify): UTC, AQE on, shuffle partitions sized to local cores rather than
-  * the 200 default (on a real cluster this would be set to ~2-3x total cores;
-  * AQE coalesces down from there).
+  * verify, the probe and stress mains): UTC, AQE on, shuffle partitions
+  * sized to local cores rather than the 200 default (on a real cluster this
+  * would be set to ~2-3x total cores; AQE coalesces down from there).
   */
 object GraftSession {
 
@@ -20,20 +20,25 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
 
   /** Release EVERY stored block: cached Datasets (CacheManager) AND
-    * RDD-level blocks that `clearCache()` cannot see — `localCheckpoint`
-    * blocks are persisted directly on the RDD, bypass the CacheManager, and
-    * are otherwise only released when the ContextCleaner happens to GC the
-    * last reference. A long single-JVM run (Bench's 28 queries, Verify's
-    * ~90) accumulates those blocks until they squeeze execution memory; a
-    * real cluster recycles executors between jobs and never sees this.
-    * Blocking unpersist so the next query starts from a clean BlockManager
-    * rather than racing the async release. */
+    * RDD-level checkpoint blocks that `clearCache()` cannot see. This is
+    * the harness end of the [[Materialize]] contract: registry builders
+    * materialize into [[Materialize.harness]] scopes that nobody closes,
+    * and Bench and Verify call this after each query. A long single-JVM
+    * run (Bench's 36 queries, Verify's ~230) would otherwise accumulate
+    * those blocks until they squeeze execution memory. Blocking unpersist
+    * so the next query starts from a clean BlockManager rather than racing
+    * the async release. */
   def releaseAllBlocks(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
-  def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** local cores for a session: `SPARK_GRAFT_CPUS` when set, else every
+    * available processor */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(threads: Int = cpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$threads]")
       .appName("graft")
@@ -44,7 +49,10 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.sql.session.timeZone", "UTC")
+      // read parquet ms/ns timestamps as TIMESTAMP (UTC) — keeps timestamp
+      // semantics identical to the DuckDB oracle (which is tz-naive)
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // events.ts is TIMESTAMP(NANOS) — read as long, converted in Tables
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

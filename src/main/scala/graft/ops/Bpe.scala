@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Byte-pair-encoding vocabulary training over a document corpus —
   * beyond-reference training-pipeline operator (the reference counts
   * tokens, `src/utils/token-counter.ts`, but never LEARNS a vocabulary;
@@ -26,7 +28,7 @@ import org.apache.spark.sql.functions._
   * Cost per merge therefore follows the AFFECTED subset (for a zipfian
   * vocab, a sliver after the first few merges), while a naive recount pays
   * the whole symbol table 50 000 times. Both iterating tables are
-  * `localCheckpoint(true)`ed per round — CONCURRENTLY, the two jobs
+  * eagerly checkpointed per round — CONCURRENTLY, the two jobs
   * overlap — with eager release of the superseded blocks: the same
   * lineage/memory discipline as [[Dedup.connectedComponents]] (a reliable
   * checkpoint replaces the local one on a cluster). Windowed (every-N)
@@ -199,11 +201,11 @@ object Bpe {
 
   private def learnBatchedLoop(spark: SparkSession, docs: DataFrame,
                                textCol: String, numMerges: Int, minCount: Long,
-                               batchK: Int, checkpointEvery: Int): Seq[Merge] = {
+                               batchK: Int, checkpointEvery: Int): Seq[Merge] = Materialize { m =>
 
     // corpus → word-frequency dict (the ONE corpus-sized aggregation),
     // then words → char symbol sequences
-    var words = docs
+    var words = m.checkpoint(docs
       .select(explode(Dedup.wordsArray(textCol)).as("w"))
       // the ONE corpus-sized shuffle keeps full parallelism regardless of
       // the loop-scoped shuffle-partition override (the groupBy reuses
@@ -213,14 +215,12 @@ object Bpe {
       // split-on-empty can emit a trailing "" depending on the regex
       // engine's limit semantics — drop any empty symbols defensively
       .select(filter(split(col("w"), ""), c => length(c) > 0).as("syms"), col("cnt"))
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint(true)
+      .filter(size(col("syms")) >= 2))
 
-    var pairCounts = words
+    var pairCounts = m.checkpoint(words
       .select(explode(adjacentPairs(col("syms"))).as("p"), col("cnt"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
+      .agg(sum("cnt").as("cnt")))
 
     val merges = Seq.newBuilder[Merge]
     // the round-0 checkpoints above are the current lineage roots; replaced
@@ -305,12 +305,13 @@ object Bpe {
           import scala.concurrent.{Await, Future}
           import scala.concurrent.ExecutionContext.Implicits.global
           import scala.concurrent.duration.Duration
-          val fp = Future(nextPairs0.localCheckpoint(true))
-          val fw = Future(nextWords0.localCheckpoint(true))
+          val fp = Future(m.checkpoint(nextPairs0))
+          val fw = Future(m.checkpoint(nextWords0))
           val nextPairs = Await.result(fp, Duration.Inf)
           val nextWords = Await.result(fw, Duration.Inf)
           // superseded checkpoints' blocks released eagerly (Dedup CC notes)
-          releaseCheckpoint(ckptPairs); releaseCheckpoint(ckptWords)
+          m.release(ckptPairs, blocking = false)
+          m.release(ckptWords, blocking = false)
           ckptPairs = nextPairs; ckptWords = nextWords
           pairCounts = nextPairs; words = nextWords
         } else {
@@ -318,14 +319,10 @@ object Bpe {
         }
       }
     }
-    releaseCheckpoint(ckptPairs); releaseCheckpoint(ckptWords)
+    m.release(ckptPairs, blocking = false)
+    m.release(ckptWords, blocking = false)
     merges.result()
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** BPE-encode `textCol` with a learned merge table: standard greedy
     * application by merge rank (always the LOWEST-rank applicable merge

@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+import graft.core.Materialize
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -164,24 +167,17 @@ object Dedup {
     *    ×100 verbatim inflation, so the split is pure overhead HERE
     *    (2.5 s vs 1.65 s at sf0.1) while remaining the right shape for a
     *    real mostly-clean corpus — hence reachable, not default.
-    * Use the releasable form in long-lived sessions; the handle unpersists
-    * the cached tokenized corpus (and the cov table when the split
-    * measurement persisted it). */
-  def spanDedup(df: DataFrame, idCol: String, textCol: String,
-                k: Int): DataFrame =
-    spanDedupReleasable(df, idCol, textCol, k)._1
-
-  def spanDedupReleasable(df: DataFrame, idCol: String, textCol: String,
-                          k: Int, splitMaxCoveredFraction: Double = -1.0)
-      : (DataFrame, () => Unit) = {
+    * The cached tokenized corpus (and the cov table when the split
+    * measurement persisted it) belong to `m`. */
+  def spanDedup(m: Materialize, df: DataFrame, idCol: String, textCol: String,
+                k: Int, splitMaxCoveredFraction: Double = -1.0): DataFrame = {
     val maxCovered =
       if (splitMaxCoveredFraction >= 0) splitMaxCoveredFraction
       else df.sparkSession.conf
         .get("spark.graft.dedup.spanSplitMaxCoveredFraction", "0.0").toDouble
-    val words = df
+    val words = m.persist(df
       .withColumn("_ws", wordsArray(textCol))
-      .select(col(idCol), col("_ws"), size(col("_ws")).as("_n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("_ws"), size(col("_ws")).as("_n")), MEMORY_AND_DISK)
     val grams = words.select(col(idCol),
       posexplode(wordShingleHashesAt("_ws", k)).as(Seq("_p", "_g")))
     val dupG = grams.groupBy("_g").agg(count(lit(1)).as("_cnt"))
@@ -191,8 +187,7 @@ object Dedup {
       .repartition(col(idCol))
       .groupBy(idCol).agg(collect_set(col("_p")).as("_cov"))
     val covSets =
-      if (maxCovered > 0)
-        covSets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (maxCovered > 0) m.persist(covSets0, MEMORY_AND_DISK)
       else covSets0
     val rebuild = udf { (ws0: Seq[String], cov: Seq[Int]) =>
       // null text → wordsArray yields null; same contract as the sibling
@@ -229,35 +224,29 @@ object Dedup {
     // count off the cov table, total-doc count off the tokenized corpus —
     // the gram pipeline still runs exactly once, into the cache). The
     // default path skips both jobs and the cov persist entirely.
-    val out =
-      if (maxCovered <= 0) joined(words)
-      else {
-        val maxIds = resolveMaxBroadcastPairs(words, -1L)
-        val nCovered = covSets
-          .limit((math.min(maxIds, Int.MaxValue - 1L) + 1L).toInt).count()
-        val nDocs = math.max(words.count(), 1L)
-        if (nCovered <= maxIds && nCovered <= maxCovered * nDocs) {
-          val coveredIds = covSets.select(idCol)
-          // clean docs: map-side identity rebuild — kept = n_words,
-          // nothing removed, cleaned = the words re-joined (byte-identical
-          // to the rebuild UDF's mask-nothing path, including the
-          // null-text row: concat_ws over a null array is "" and n_kept
-          // coalesces to 0)
-          val cleanOut = words
-            .join(broadcast(coveredIds), Seq(idCol), "left_anti")
-            .select(col(idCol), col("_n").cast("long").as("n_words"),
-              coalesce(col("_n").cast("long"), lit(0L)).as("n_kept"),
-              (col("_n") - coalesce(col("_n"), lit(0))).cast("long").as("n_removed"),
-              concat_ws(" ", col("_ws")).as("cleaned"))
-          joined(words.join(broadcast(coveredIds), Seq(idCol), "left_semi"))
-            .unionByName(cleanOut)
-        } else joined(words)
-      }
-    (out, () => {
-      words.unpersist(blocking = true)
-      if (maxCovered > 0) covSets.unpersist(blocking = true)
-      ()
-    })
+    if (maxCovered <= 0) joined(words)
+    else {
+      val maxIds = resolveMaxBroadcastPairs(words, -1L)
+      val nCovered = covSets
+        .limit((math.min(maxIds, Int.MaxValue - 1L) + 1L).toInt).count()
+      val nDocs = math.max(words.count(), 1L)
+      if (nCovered <= maxIds && nCovered <= maxCovered * nDocs) {
+        val coveredIds = covSets.select(idCol)
+        // clean docs: map-side identity rebuild — kept = n_words,
+        // nothing removed, cleaned = the words re-joined (byte-identical
+        // to the rebuild UDF's mask-nothing path, including the
+        // null-text row: concat_ws over a null array is "" and n_kept
+        // coalesces to 0)
+        val cleanOut = words
+          .join(broadcast(coveredIds), Seq(idCol), "left_anti")
+          .select(col(idCol), col("_n").cast("long").as("n_words"),
+            coalesce(col("_n").cast("long"), lit(0L)).as("n_kept"),
+            (col("_n") - coalesce(col("_n"), lit(0))).cast("long").as("n_removed"),
+            concat_ws(" ", col("_ws")).as("cleaned"))
+        joined(words.join(broadcast(coveredIds), Seq(idCol), "left_semi"))
+          .unionByName(cleanOut)
+      } else joined(words)
+    }
   }
 
   private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
@@ -328,27 +317,19 @@ object Dedup {
     * banding comes from [[bandingFor]], candidates from the (hot-bucket-
     * capped) banded join, and every candidate is verified with the exact
     * broadcast per-pair Jaccard — the scale shape the benched
-    * d_jaccard_pairs_lsh pins, behind a one-argument knob. */
-  def nearDupPairsAt(df: DataFrame, idCol: String, shinglesCol: String,
-                     threshold: Double, nHashes: Int = 128): DataFrame =
-    nearDupPairsAtReleasable(df, idCol, shinglesCol, threshold, nHashes)._1
-
-  /** [[nearDupPairsAt]] plus the verify stage's release handle — the
-    * long-lived-session form (engine tool calls): the candidate pair list
-    * (and the posting route's candidate projection, when taken) is
-    * persisted until the handle runs. The verify is the r13 measured-routed
-    * shape ([[jaccardOnPairsRoutedReleasable]]). */
-  def nearDupPairsAtReleasable(df: DataFrame, idCol: String, shinglesCol: String,
-                               threshold: Double,
-                               nHashes: Int = 128): (DataFrame, () => Unit) = {
+    * d_jaccard_pairs_lsh pins, behind a one-argument knob. The verify is
+    * the r13 measured-routed shape ([[jaccardOnPairsRouted]]); the
+    * candidate pair list it persists belongs to `m`. */
+  def nearDupPairsAt(m: Materialize, df: DataFrame, idCol: String,
+                     shinglesCol: String, threshold: Double,
+                     nHashes: Int = 128): DataFrame = {
     val (b, r) = bandingFor(threshold, nHashes)
     val withSig = df.filter(size(col(shinglesCol)) > 0)
       .withColumn("_hs", shingleBaseHashes(shinglesCol))
       .withColumn("_sig", minhashSignature("_hs", nHashes))
     val candidates = lshCandidatePairs(lshBands(withSig, idCol, "_sig", b, r), idCol)
-    val (verified, release) =
-      jaccardOnPairsRoutedReleasable(candidates, df, idCol, shinglesCol)
-    (verified.filter(col("jaccard") >= threshold), release)
+    jaccardOnPairsRouted(m, candidates, df, idCol, shinglesCol)
+      .filter(col("jaccard") >= threshold)
   }
 
   /** LSH banding: explode signature into (bandId, bandHash) rows.
@@ -442,35 +423,26 @@ object Dedup {
       .filter(col("bucket_size") > maxBucketSize)
 
   /** exact n-gram Jaccard pairs over a shingle posting join; emits
-    * (id_a, id_b, jaccard) for pairs sharing >= 1 shingle. */
-  def jaccardPairs(df: DataFrame, idCol: String, shinglesCol: String,
-                   threshold: Double): DataFrame =
-    jaccardPairsReleasable(df, idCol, shinglesCol, threshold)._1
-
-  /** [[jaccardPairs]] plus a release handle for the persisted postings —
-    * same contract as [[routedPairJoinReleasable]]: invoke after the
-    * terminal action; the handle-less overload leaves the blocks to the
-    * caller's session. */
-  def jaccardPairsReleasable(df: DataFrame, idCol: String, shinglesCol: String,
-                             threshold: Double): (DataFrame, () => Unit) = {
+    * (id_a, id_b, jaccard) for pairs sharing >= 1 shingle. The persisted
+    * postings belong to `m`. */
+  def jaccardPairs(m: Materialize, df: DataFrame, idCol: String,
+                   shinglesCol: String, threshold: Double): DataFrame = {
     // set size rides along the posting explode, so the per-pair union size
     // is recovered from the grouped rows themselves (max of a functionally-
     // dependent column) — no separate sizes relation, no post-agg joins.
     // Persisting the postings makes the self-join read the (expensive)
     // shingle projection once instead of once per side.
-    val posts = df.select(col(idCol), size(col(shinglesCol)).as("n_sh"),
-        explode(col(shinglesCol)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val posts = m.persist(df.select(col(idCol), size(col(shinglesCol)).as("n_sh"),
+      explode(col(shinglesCol)).as("sh")), MEMORY_AND_DISK)
     val l = posts.select(col("sh"), col(idCol).as("id_a"), col("n_sh").as("n_a"))
     val r = posts.select(col("sh"), col(idCol).as("id_b"), col("n_sh").as("n_b"))
-    val out = l.join(r, "sh").filter(col("id_a") < col("id_b"))
+    l.join(r, "sh").filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"), max("n_a").as("n_a"), max("n_b").as("n_b"))
       .withColumn("jaccard",
         round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 4))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    (out, () => { posts.unpersist(blocking = true); () })
   }
 
   /** Cross-document duplicate k-gram coverage — per document, the fraction
@@ -484,13 +456,8 @@ object Dedup {
     * Scale shape: both aggregations and the join are keyed on the gram —
     * two gram-hash shuffles over O(total grams) rows, never a document
     * pair join. Shingles arrive distinct per doc ([[wordShingles]]), so
-    * the gram→doc count IS the containing-doc count. */
-  def dupGramCoverage(docs: DataFrame, idCol: String,
-                      shinglesCol: String): DataFrame =
-    dupGramCoverageReleasable(docs, idCol, shinglesCol)._1
-
-  /** [[dupGramCoverage]] plus a release handle for the persisted compact
-    * shingle projection (same contract as [[jaccardPairsReleasable]]).
+    * the gram→doc count IS the containing-doc count. The persisted compact
+    * shingle projection belongs to `m`.
     *
     * Plan shape (r15 rebuild — the r14 span-dedup playbook applied):
     * shingles are DISTINCT per doc ([[wordShingles]]), so a gram whose
@@ -511,10 +478,9 @@ object Dedup {
     * one-sided and vanishing for a ">= 2 docs" threshold signal (~1e-7 at
     * 1M distinct grams; even at 10^12 corpus grams the chance any count is
     * off stays in the percent range, far below the signal's own noise). */
-  def dupGramCoverageReleasable(docs: DataFrame, idCol: String,
-                                shinglesCol: String): (DataFrame, () => Unit) = {
-    val compact = docs.select(col(idCol), col(shinglesCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def dupGramCoverage(m: Materialize, docs: DataFrame, idCol: String,
+                      shinglesCol: String): DataFrame = {
+    val compact = m.persist(docs.select(col(idCol), col(shinglesCol)), MEMORY_AND_DISK)
     val totals = compact.select(col(idCol), size(col(shinglesCol)).as("n_grams"))
     // ONE gram-keyed pass: per gram, (occurrence count, smallest owner).
     // count==1 ⟹ min(doc) IS the sole owner; grams with count >= 2 are
@@ -523,12 +489,11 @@ object Dedup {
       .groupBy("_cg").agg(count(lit(1)).as("_ndocs"), min(col(idCol)).as(idCol))
       .filter(col("_ndocs") === 1)
       .groupBy(idCol).agg(count(lit(1)).as("_nsolo"))
-    val out = totals.join(solo, Seq(idCol), "left")
+    totals.join(solo, Seq(idCol), "left")
       .select(col(idCol),
         (round((col("n_grams") - coalesce(col("_nsolo"), lit(0L))) /
           greatest(col("n_grams"), lit(1)), 4) + 0.0).as("dup_gram_frac"),
         col("n_grams").cast("long").as("n_grams"))
-    (out, () => { compact.unpersist(blocking = true); () })
   }
 
   /** Candidate-pair count above which the verify stage stops forcing a
@@ -549,36 +514,20 @@ object Dedup {
     * shuffle-hash join on the pair keys when it is not (the payload shuffle
     * is linear and affordable; an oversized forced broadcast is a hard
     * failure). The pair list is persisted so the count does not recompute
-    * candidate generation — blocks live until the caller's session releases
-    * them (same caveat as [[jaccardPairs]]'s postings). `l` must carry
-    * `id_a` (+ payload), `r` must carry `id_b` (+ payload).
+    * candidate generation; the lazily-returned join reads those blocks, so
+    * they belong to `m` and live until it closes. `l` must carry `id_a`
+    * (+ payload), `r` must carry `id_b` (+ payload).
     *
     * `maxBroadcastPairs < 0` (the default) reads the session conf
     * `spark.graft.dedup.maxBroadcastPairs` (falling back to
     * [[MaxBroadcastPairs]]) — deployments size the broadcast budget to
     * their driver/executor memory without touching pipeline code. */
-  def routedPairJoin(pairs: DataFrame, l: DataFrame, r: DataFrame,
-                     maxBroadcastPairs: Long = -1L): DataFrame =
-    routedPairJoinReleasable(pairs, l, r, maxBroadcastPairs)._1
-
-  /** [[routedPairJoin]] plus a RELEASE HANDLE for the persisted pair
-    * projection. The lazily-returned join cannot unpersist its own input
-    * before the caller runs it, so the handle-less overload leaves the
-    * MEMORY_AND_DISK blocks to the caller's session (fine for a
-    * run-one-query harness, accumulation in a long-lived engine). Callers
-    * that own their terminal action invoke the handle AFTER it completes
-    * (earlier is safe — the plan recomputes — just wasteful); the blocking
-    * unpersist makes "blocks gone" synchronous, so a session-hygiene gate
-    * (getPersistentRDDs empty) can assert it deterministically. */
-  def routedPairJoinReleasable(pairs: DataFrame, l: DataFrame, r: DataFrame,
-                               maxBroadcastPairs: Long = -1L): (DataFrame, () => Unit) = {
+  def routedPairJoin(m: Materialize, pairs: DataFrame, l: DataFrame,
+                     r: DataFrame, maxBroadcastPairs: Long = -1L): DataFrame = {
     val limit = resolveMaxBroadcastPairs(pairs, maxBroadcastPairs)
-    val p = pairs.select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
-    (routedPairJoinCounted(p, n, limit, l, r),
-      () => { p.unpersist(blocking = true); () })
+    val p = m.persist(pairs.select(col("id_a").cast("long").as("id_a"),
+      col("id_b").cast("long").as("id_b")), MEMORY_AND_DISK)
+    routedPairJoinCounted(p, p.count(), limit, l, r)
   }
 
   private def resolveMaxBroadcastPairs(df: DataFrame,
@@ -588,10 +537,10 @@ object Dedup {
       .get("spark.graft.dedup.maxBroadcastPairs", MaxBroadcastPairs.toString)
       .toLong
 
-  /** the join-shape decision of [[routedPairJoinReleasable]] given an
+  /** the join-shape decision of [[routedPairJoin]] given an
     * ALREADY-persisted, already-counted canonical (long id_a, id_b) pair
     * projection — the shared tail reused by the measured route in
-    * [[pairStatsRoutedReleasable]], which has its own persisted copy and
+    * [[pairStatsRouted]], which has its own persisted copy and
     * exact count in hand (ADVICE r13: the carry route used to persist and
     * driver-count the same pair list a second time here). */
   private def routedPairJoinCounted(p: DataFrame, n: Long, limit: Long,
@@ -613,28 +562,17 @@ object Dedup {
     * the semi-join shuffles on `idCol` instead of forcing an unbounded
     * broadcast ("small by construction" is not a bound — a boilerplate
     * crawl's candidate explosion reaches the id set too). `ids` is
-    * persisted for the count; caller's session releases the blocks. */
-  def routedSemiJoin(payload: DataFrame, ids: DataFrame, idCol: String,
-                     maxBroadcastPairs: Long = -1L): DataFrame =
-    routedSemiJoinReleasable(payload, ids, idCol, maxBroadcastPairs)._1
-
-  /** [[routedSemiJoin]] plus a release handle for the persisted id set —
-    * same contract as [[routedPairJoinReleasable]]. Per-micro-batch callers
-    * (the streaming dedup twin) MUST use this form: one leaked cached id
-    * block per batch accumulates for the stream's lifetime. */
-  def routedSemiJoinReleasable(payload: DataFrame, ids: DataFrame, idCol: String,
-                               maxBroadcastPairs: Long = -1L): (DataFrame, () => Unit) = {
+    * persisted for the count, in `m`. */
+  def routedSemiJoin(m: Materialize, payload: DataFrame, ids: DataFrame,
+                     idCol: String, maxBroadcastPairs: Long = -1L): DataFrame = {
     val limit = 2 * (
       if (maxBroadcastPairs >= 0) maxBroadcastPairs
       else ids.sparkSession.conf
         .get("spark.graft.dedup.maxBroadcastPairs", MaxBroadcastPairs.toString)
         .toLong)
-    val p = ids.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
-    val joined =
-      if (n <= limit) payload.join(broadcast(p), Seq(idCol), "left_semi")
-      else payload.join(p.hint("shuffle_hash"), Seq(idCol), "left_semi")
-    (joined, () => { p.unpersist(blocking = true); () })
+    val p = m.persist(ids, MEMORY_AND_DISK)
+    if (p.count() <= limit) payload.join(broadcast(p), Seq(idCol), "left_semi")
+    else payload.join(p.hint("shuffle_hash"), Seq(idCol), "left_semi")
   }
 
   /** 64-bit-hashed twin of a shingle array column: per-element xxhash64,
@@ -662,35 +600,24 @@ object Dedup {
     * sizes and intersections (hence the emitted jaccard) are unchanged up
     * to 64-bit collisions (contract documented there), and the verify
     * exchange narrows ~5-6×. */
-  def jaccardOnPairs(pairs: DataFrame, df: DataFrame, idCol: String,
-                     shinglesCol: String,
+  def jaccardOnPairs(m: Materialize, pairs: DataFrame, df: DataFrame,
+                     idCol: String, shinglesCol: String,
                      maxBroadcastPairs: Long = -1L): DataFrame =
-    jaccardOnPairsReleasable(pairs, df, idCol, shinglesCol, maxBroadcastPairs)._1
-
-  /** [[jaccardOnPairs]] plus the routed join's release handle
-    * ([[routedPairJoinReleasable]]) — for callers that own their terminal
-    * action, e.g. the per-micro-batch verify in the streaming dedup twin. */
-  def jaccardOnPairsReleasable(pairs: DataFrame, df: DataFrame, idCol: String,
-                               shinglesCol: String,
-                               maxBroadcastPairs: Long = -1L): (DataFrame, () => Unit) = {
-    val (stats, release) = pairStatsCarry(pairs, df, idCol, shinglesCol,
-      maxBroadcastPairs)
-    (stats.withColumn("jaccard", round(col("_inter") /
+    pairStatsCarry(m, pairs, df, idCol, shinglesCol, maxBroadcastPairs)
+      .withColumn("jaccard", round(col("_inter") /
         (col("_n_a") + col("_n_b") - col("_inter")), 4))
-      .select(col("id_a"), col("id_b"), col("jaccard")), release)
-  }
+      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Pair-carry intersection stats — per candidate pair, the shared-gram
     * count plus both set sizes: (id_a, id_b, _inter, _n_a, _n_b). The
     * common core under Jaccard (union from sizes) and containment (either
     * size as denominator); the payload moved is [[hashedShingles]] longs
-    * via [[routedPairJoinReleasable]]. */
-  private def pairStatsCarry(pairs: DataFrame, df: DataFrame, idCol: String,
-                             shinglesCol: String,
-                             maxBroadcastPairs: Long): (DataFrame, () => Unit) = {
+    * via [[routedPairJoin]]. */
+  private def pairStatsCarry(m: Materialize, pairs: DataFrame, df: DataFrame,
+                             idCol: String, shinglesCol: String,
+                             maxBroadcastPairs: Long): DataFrame = {
     val (l, r) = carryProjections(df, idCol, shinglesCol)
-    val (joined, release) = routedPairJoinReleasable(pairs, l, r, maxBroadcastPairs)
-    (carryStats(joined), release)
+    carryStats(routedPairJoin(m, pairs, l, r, maxBroadcastPairs))
   }
 
   /** the carry route's per-side (id, hashed-gram set) projections.
@@ -770,47 +697,31 @@ object Dedup {
     * candidate generator emits ([[lshCandidatePairs]]'s `j > i` guard, the
     * index store's delta probe). The posting route counts co-occurrence
     * under that ordering; a reversed pair would verify to 0 there while
-    * the pair carry scores it symmetrically. */
-  def jaccardOnPairsRouted(pairs: DataFrame, df: DataFrame, idCol: String,
-                           shinglesCol: String, maxBroadcastPairs: Long = -1L,
+    * the pair carry scores it symmetrically.
+    *
+    * Every block the chosen route persists (pair list, and on the posting
+    * route the semi-joined candidate projection) belongs to `m`. */
+  def jaccardOnPairsRouted(m: Materialize, pairs: DataFrame, df: DataFrame,
+                           idCol: String, shinglesCol: String,
+                           maxBroadcastPairs: Long = -1L,
                            postingFactor: Double = -1.0): DataFrame =
-    jaccardOnPairsRoutedReleasable(pairs, df, idCol, shinglesCol,
-      maxBroadcastPairs, postingFactor)._1
-
-  /** [[jaccardOnPairsRouted]] plus the release handle for every block the
-    * chosen route persists (pair list, and on the posting route the
-    * semi-joined candidate projection) — contract of
-    * [[routedPairJoinReleasable]]. */
-  def jaccardOnPairsRoutedReleasable(pairs: DataFrame, df: DataFrame,
-                                     idCol: String, shinglesCol: String,
-                                     maxBroadcastPairs: Long = -1L,
-                                     postingFactor: Double = -1.0): (DataFrame, () => Unit) = {
-    val (stats, release) = pairStatsRoutedReleasable(pairs, df, idCol,
-      shinglesCol, maxBroadcastPairs, postingFactor)
-    (stats.withColumn("jaccard",
+    pairStatsRouted(m, pairs, df, idCol, shinglesCol, maxBroadcastPairs,
+        postingFactor)
+      .withColumn("jaccard",
         round(coalesce(col("_inter"), lit(0L)) /
           (col("_n_a") + col("_n_b") - coalesce(col("_inter"), lit(0L))), 4))
-      .select(col("id_a"), col("id_b"), col("jaccard")), release)
-  }
+      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Measured-routed pair intersection stats (id_a, id_b, _inter, _n_a,
-    * _n_b) — the shared core of [[jaccardOnPairsRoutedReleasable]] and the
+    * _n_b) — the shared core of [[jaccardOnPairsRouted]] and the
     * containment verify (both denominators are recoverable from the same
     * three numbers). `_inter` is null (not 0) for a posting-route pair
     * sharing no gram — consumers coalesce. Routing/contract as documented
     * on [[jaccardOnPairsRouted]]. */
-  /** handle-less [[pairStatsRoutedReleasable]] — run-one-query harnesses;
-    * long-lived sessions take the releasable form */
-  def pairStatsRouted(pairs: DataFrame, df: DataFrame, idCol: String,
-                      shinglesCol: String, maxBroadcastPairs: Long = -1L,
-                      postingFactor: Double = -1.0): DataFrame =
-    pairStatsRoutedReleasable(pairs, df, idCol, shinglesCol,
-      maxBroadcastPairs, postingFactor)._1
-
-  def pairStatsRoutedReleasable(pairs: DataFrame, df: DataFrame,
-                                idCol: String, shinglesCol: String,
-                                maxBroadcastPairs: Long = -1L,
-                                postingFactor: Double = -1.0): (DataFrame, () => Unit) = {
+  def pairStatsRouted(m: Materialize, pairs: DataFrame, df: DataFrame,
+                      idCol: String, shinglesCol: String,
+                      maxBroadcastPairs: Long = -1L,
+                      postingFactor: Double = -1.0): DataFrame = {
     val factor =
       if (postingFactor >= 0) postingFactor
       else pairs.sparkSession.conf
@@ -825,41 +736,39 @@ object Dedup {
     // default knob. Measure only when the knob makes routing a real
     // decision.
     if (factor >= PostingVerifyFactor)
-      pairStatsCarry(pairs, df, idCol, shinglesCol, maxBroadcastPairs)
-    else pairStatsMeasured(pairs, df, idCol, shinglesCol, maxBroadcastPairs,
+      pairStatsCarry(m, pairs, df, idCol, shinglesCol, maxBroadcastPairs)
+    else pairStatsMeasured(m, pairs, df, idCol, shinglesCol, maxBroadcastPairs,
       factor)
   }
 
-  /** the measured leg of [[pairStatsRoutedReleasable]]: one measurement job
-    * over the persisted pair list picks carry vs posting. Only reached when
-    * the effective factor makes posting genuinely reachable. */
-  private def pairStatsMeasured(pairs: DataFrame, df: DataFrame,
+  /** the measured leg of [[pairStatsRouted]]: one measurement job over the
+    * persisted pair list picks carry vs posting. Only reached when the
+    * effective factor makes posting genuinely reachable. */
+  private def pairStatsMeasured(m: Materialize, pairs: DataFrame, df: DataFrame,
                                 idCol: String, shinglesCol: String,
                                 maxBroadcastPairs: Long,
-                                factor: Double): (DataFrame, () => Unit) = {
-    val p = pairs.select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                factor: Double): DataFrame = {
+    val p = m.persist(pairs.select(col("id_a").cast("long").as("id_a"),
+      col("id_b").cast("long").as("id_b")), MEMORY_AND_DISK)
     // ONE measurement job over the cached pairs: exact pair count + approx
     // distinct touched ids (HLL partial-merged, no shuffle of the ids —
     // the route threshold tolerates the ~2% estimate error)
-    val m = p.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
+    val measured = p.select(explode(array(col("id_a"), col("id_b"))).as("_id"))
       .agg(count(lit(1)).as("n2"), approx_count_distinct("_id").as("nid"))
       .head()
-    val nPairs = m.getLong(0) / 2
-    val nIds = math.max(m.getLong(1), 1L)
+    val nPairs = measured.getLong(0) / 2
+    val nIds = math.max(measured.getLong(1), 1L)
     if (nPairs <= factor * nIds) {
       dedupLog.info(s"verify route: pair-carry (pairs=$nPairs ids~$nIds " +
         s"factor=$factor)")
       // reuse the ALREADY-persisted canonical pair list and its exact count
       // for the carry join's broadcast-vs-shuffle decision (ADVICE r13: this
       // path used to persist a second projection of the same pairs and run
-      // a second driver-blocking count inside routedPairJoinReleasable —
+      // a second driver-blocking count inside routedPairJoin —
       // two cached copies and two jobs per verify)
       val limit = resolveMaxBroadcastPairs(pairs, maxBroadcastPairs)
       val (lp, rp) = carryProjections(df, idCol, shinglesCol)
-      val out = carryStats(routedPairJoinCounted(p, nPairs, limit, lp, rp))
-      (out, () => { p.unpersist(blocking = true); () })
+      carryStats(routedPairJoinCounted(p, nPairs, limit, lp, rp))
     } else {
       dedupLog.info(s"verify route: posting-join (pairs=$nPairs ids~$nIds " +
         s"factor=$factor)")
@@ -869,12 +778,10 @@ object Dedup {
       // big to broadcast) then moves (id, hashed grams), never the text
       val payload = df.select(col(idCol).cast("long").as(idCol),
         array_distinct(hashedShingles(shinglesCol)).as("_shs"))
-      val (candDocs0, relSemi) =
-        routedSemiJoinReleasable(payload, cand, idCol, maxBroadcastPairs)
       // feeds the size projection + BOTH posting sides — cache the compact
       // hashed projection once instead of recomputing the shingle pipeline
-      val candDocs = candDocs0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val candDocs = m.persist(
+        routedSemiJoin(m, payload, cand, idCol, maxBroadcastPairs), MEMORY_AND_DISK)
       val sizes = candDocs.select(col(idCol), size(col("_shs")).as("_n"))
       val posts = candDocs.select(col(idCol), explode(col("_shs")).as("_g"))
       // gram-keyed co-occurrence count: each candidate doc's grams cross
@@ -893,18 +800,11 @@ object Dedup {
         .select("id_a", "id_b")
         .repartition(col("id_a"), col("id_b"))
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("_inter"))
-      val out = p
-        .join(sizes.select(col(idCol).as("id_a"), col("_n").as("_n_a")), Seq("id_a"))
+      p.join(sizes.select(col(idCol).as("id_a"), col("_n").as("_n_a")), Seq("id_a"))
         .join(sizes.select(col(idCol).as("id_b"), col("_n").as("_n_b")), Seq("id_b"))
         .join(inter, Seq("id_a", "id_b"), "left")
         .select(col("id_a"), col("id_b"), col("_inter"),
           col("_n_a"), col("_n_b"))
-      (out, () => {
-        candDocs.unpersist(blocking = true)
-        relSemi()
-        p.unpersist(blocking = true)
-        ()
-      })
     }
   }
 
@@ -1070,18 +970,12 @@ object Dedup {
     * Reference behavior twin: the reference dedups by dropping one side of
     * each verified pair (vectordb upsert keeps first-write); this operator
     * is the corpus-scale generalization that makes the survivor choice
-    * well-defined on chains. */
-  /** The persisted RDD behind a `localCheckpoint(true)`ed Dataset, if any.
-    * Checkpoint blocks live on the RDD (not in the CacheManager), so this
-    * is the only handle through which they can be released eagerly. */
-  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  def connectedComponents(edges: DataFrame, idACol: String = "id_a",
-                          idBCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    * well-defined on chains.
+    *
+    * The returned labels are the last round's checkpoint, held by `m`. */
+  def connectedComponents(m: Materialize, edges: DataFrame,
+                          idACol: String = "id_a", idBCol: String = "id_b",
+                          maxIter: Int = 25): DataFrame = {
     // NO distinct on the symmetrized edge stream: min-label propagation is
     // IDEMPOTENT under duplicate edges (min over neighbors is unchanged by
     // repeats), so deduping here would spend a full shuffle + aggregate
@@ -1104,10 +998,9 @@ object Dedup {
       // ContextCleaner to GC them lets one round per iteration pile up in
       // the BlockManager for the rest of the session, squeezing execution
       // memory for whatever runs next in the same JVM.
-      var labels = sym.select(col("src").as("id"))
+      var labels = m.checkpoint(sym.select(col("src").as("id"))
         .distinct()
-        .select(col("id"), col("id").as("comp"))
-        .localCheckpoint(true)
+        .select(col("id"), col("id").as("comp")))
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < maxIter) {
@@ -1151,12 +1044,12 @@ object Dedup {
           .observe("cc_changed", coalesce(
             sum(when(col("comp") =!= col("old_comp"), 1L).otherwise(0L)),
             lit(0L)).as("changed"))
-        val next = observed.localCheckpoint(true)
+        val next = m.checkpoint(observed)
         changed = observed.queryExecution.observedMetrics("cc_changed")
           .getAs[Long]("changed")
         // `next` is eagerly materialized into its own blocks, so the
         // previous round's checkpoint is now dead weight — release it.
-        checkpointRdd(labels).foreach(_.unpersist(blocking = true))
+        m.release(labels)
         labels = next.select("id", "comp")
         iter += 1
       }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Distributed suffix-array construction by prefix doubling
   * (Manber–Myers; the distributed formulation follows Flick & Aluru,
   * "Parallel distributed memory construction of suffix and LCP arrays",
@@ -37,14 +39,16 @@ import org.apache.spark.sql.functions._
   *    would otherwise nest k joins deep); superseded checkpoint blocks
   *    are released eagerly, the [[graft.ops.Dedup.connectedComponents]]
   *    discipline. On a cluster a reliable checkpoint replaces the local
-  *    one, same shape.
+  *    one, same shape. The returned array is itself a checkpoint, held
+  *    by the caller's [[graft.core.Materialize]] scope.
   */
 object SuffixArray {
 
   /** (doc_id, pos, rank) for every CHARACTER suffix of every document;
     * rank is the dense 0-based global lexicographic position (ties by
     * doc_id, pos). */
-  def build(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def build(m: Materialize, docs: DataFrame, idCol: String,
+            textCol: String): DataFrame = {
     // (doc_id, pos, unit): one row per character = one per suffix. The
     // exploded object is an INT sequence (4 bytes/char resident per
     // document row) and the character is cut with substr in the same
@@ -66,7 +70,7 @@ object SuffixArray {
       case r if r.isNullAt(0) => (0, 0L)
       case r => (r.getInt(0), r.getLong(1))
     }
-    rankUnits(chars, maxLen, total)
+    rankUnits(m, chars, maxLen, total)
   }
 
   /** TOKEN-level suffix array — the unit Lee et al. 2022 actually dedup
@@ -74,7 +78,8 @@ object SuffixArray {
     * ([[Dedup.wordsArray]] tokenization), globally ranked. The doubling
     * core is unit-agnostic, so this is the same O(log maxDocTokens)
     * machinery over a ~6× smaller row count than the char-level array. */
-  def buildTokens(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def buildTokens(m: Materialize, docs: DataFrame, idCol: String,
+                  textCol: String): DataFrame = {
     val toks = docs.select(col(idCol).cast("long").as("doc_id"),
         Dedup.wordsArray(textCol).as("ws"))
       .select(col("doc_id"), posexplode(col("ws")).as(Seq("pos", "unit")))
@@ -84,7 +89,7 @@ object SuffixArray {
       case r if r.isNullAt(0) => (0, 0L)
       case r => (r.getLong(0).toInt, r.getLong(1))
     }
-    rankUnits(toks, maxLen, total)
+    rankUnits(m, toks, maxLen, total)
   }
 
   /** Suffix count above which the per-round sort caches store SERIALIZED
@@ -100,7 +105,7 @@ object SuffixArray {
     * stream — see the object doc for the per-round shape. `totalUnits`
     * (exact, from the callers' ride-along agg) picks the round-cache
     * storage level via [[SerializeCacheAbove]]. */
-  private def rankUnits(units: DataFrame, maxLen: Int,
+  private def rankUnits(m: Materialize, units: DataFrame, maxLen: Int,
                         totalUnits: Long): DataFrame = {
     val cacheLevel =
       if (totalUnits > SerializeCacheAbove)
@@ -110,13 +115,6 @@ object SuffixArray {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
 
-    def ckRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-    def release(df: DataFrame): Unit =
-      ckRdd(df).foreach(_.unpersist(blocking = true))
-
     // Sort + zipWithIndex dense ranking: rows ordered by `by`, indexed in
     // global sort order (range partitioning keeps this distributed).
     // zipWithIndex launches a per-partition-count job that EXECUTES the
@@ -124,7 +122,7 @@ object SuffixArray {
     // in the cache and the eager checkpoint below consumes it, instead of
     // re-running every sort twice; the parent blocks drop immediately
     // after. Returns an eagerly checkpointed frame — caller releases it
-    // (via the checkpoint RDD) when superseded.
+    // from `m` when superseded.
     def denseIndex(df: DataFrame, by: Seq[Column], out: Seq[String]): DataFrame = {
       val sorted = df.orderBy(by: _*)
       // ADAPTIVE storage (see SerializeCacheAbove): serialized above the
@@ -138,9 +136,8 @@ object SuffixArray {
       val indexed = srdd.zipWithIndex().map { case (r, i) =>
         Row.fromSeq(r.toSeq :+ i)
       }
-      val result = spark.createDataFrame(indexed, schema)
-        .select((out :+ "idx").map(col): _*)
-        .localCheckpoint(true)
+      val result = m.checkpoint(spark.createDataFrame(indexed, schema)
+        .select((out :+ "idx").map(col): _*))
       srdd.unpersist(blocking = false)
       result
     }
@@ -149,10 +146,9 @@ object SuffixArray {
     val unitRanks = denseIndex(units.select("unit").distinct(),
         Seq(col("unit")), Seq("unit"))
       .withColumnRenamed("idx", "rank")
-    var ranks = units.join(unitRanks, "unit")
-      .select(col("doc_id"), col("pos"), col("rank"))
-      .localCheckpoint(true)
-    release(unitRanks)
+    var ranks = m.checkpoint(units.join(unitRanks, "unit")
+      .select(col("doc_id"), col("pos"), col("rank")))
+    m.release(unitRanks)
 
     def distinctRanks(df: DataFrame): Long =
       df.agg(countDistinct(col("rank"))).head().getLong(0)
@@ -172,12 +168,11 @@ object SuffixArray {
       val keys = denseIndex(
         paired.select("rank", "rank2").distinct(),
         Seq(col("rank"), col("rank2")), Seq("rank", "rank2"))
-      val next = paired.join(keys, Seq("rank", "rank2"))
-        .select(col("doc_id"), col("pos"), col("idx").as("rank"))
-        .localCheckpoint(true)
+      val next = m.checkpoint(paired.join(keys, Seq("rank", "rank2"))
+        .select(col("doc_id"), col("pos"), col("idx").as("rank")))
       val d = distinctRanks(next)
-      release(keys)
-      release(ranks)
+      m.release(keys)
+      m.release(ranks)
       ranks = next
       fixed = d == prevDistinct // no refinement ⇒ fixed point
       prevDistinct = d
@@ -192,7 +187,7 @@ object SuffixArray {
       Seq("doc_id", "pos"))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("idx").as("rank"))
-    release(ranks)
+    m.release(ranks)
     out
   }
 
@@ -208,9 +203,9 @@ object SuffixArray {
     * Returns (lcp, substring, doc_a, pos_a, doc_b, pos_b) for the best
     * pair, smallest (doc_a, pos_a, doc_b, pos_b) on ties — deterministic
     * for the oracle. */
-  def longestRepeat(docs: DataFrame, idCol: String, textCol: String,
-                    cap: Int = 256): DataFrame = {
-    val sa = build(docs, idCol, textCol)
+  def longestRepeat(m: Materialize, docs: DataFrame, idCol: String,
+                    textCol: String, cap: Int = 256): DataFrame = {
+    val sa = build(m, docs, idCol, textCol)
     val prefixes = docs.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("t"))
       .join(sa, "doc_id")
@@ -243,9 +238,9 @@ object SuffixArray {
     * to O(n · cap) tokens, corpus-linear; same tie-break contract as
     * [[longestRepeat]]. Returns (lcp, repeat, doc_a, pos_a, doc_b,
     * pos_b) with `repeat` the words joined by single spaces. */
-  def longestTokenRepeat(docs: DataFrame, idCol: String, textCol: String,
-                         cap: Int = 64): DataFrame = {
-    val sa = buildTokens(docs, idCol, textCol)
+  def longestTokenRepeat(m: Materialize, docs: DataFrame, idCol: String,
+                         textCol: String, cap: Int = 64): DataFrame = {
+    val sa = buildTokens(m, docs, idCol, textCol)
     val prefixes = docs.select(col(idCol).cast("long").as("doc_id"),
         Dedup.wordsArray(textCol).as("ws"))
       .join(sa, "doc_id")

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** WordPiece tokenizer training and application — the third tokenizer
   * family next to [[Bpe]] and [[Unigram]], and the BERT-lineage one
   * (Schuster & Nakajima 2012; the HF `tokenizers` WordPiece trainer is
@@ -93,24 +95,21 @@ object WordPiece {
   }
 
   private def loop(spark: SparkSession, docs: DataFrame, textCol: String,
-                   numMerges: Int, minCount: Long, batchK: Int): Seq[WpMerge] = {
+                   numMerges: Int, minCount: Long, batchK: Int): Seq[WpMerge] = Materialize { m =>
     val initUdf = udf((w: String) => initSymbols(w))
-    var words = docs
+    var words = m.checkpoint(docs
       .select(explode(Dedup.wordsArray(textCol)).as("w"))
       .repartition(spark.sparkContext.defaultParallelism, col("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(initUdf(col("w")).as("syms"), col("cnt"))
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint(true)
-    var pairCounts = words
+      .filter(size(col("syms")) >= 2))
+    var pairCounts = m.checkpoint(words
       .select(explode(adjacentPairs(col("syms"))).as("p"), col("cnt"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
-    var symCounts = words
+      .agg(sum("cnt").as("cnt")))
+    var symCounts = m.checkpoint(words
       .select(explode(col("syms")).as("s"), col("cnt"))
-      .groupBy("s").agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
+      .groupBy("s").agg(sum("cnt").as("cnt")))
 
     val merges = Seq.newBuilder[WpMerge]
     var ckpt = Seq(words, pairCounts, symCounts)
@@ -181,21 +180,16 @@ object WordPiece {
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
         val fs = Seq(nextWords0, nextPairs0, nextSyms0)
-          .map(df => Future(df.localCheckpoint(true)))
+          .map(df => Future(m.checkpoint(df)))
         val Seq(nw, np, ns) = fs.map(Await.result(_, Duration.Inf))
-        ckpt.foreach(releaseCheckpoint)
+        ckpt.foreach(m.release(_, blocking = false))
         ckpt = Seq(nw, np, ns)
         words = nw; pairCounts = np; symCounts = ns
       }
     }
-    ckpt.foreach(releaseCheckpoint)
+    ckpt.foreach(m.release(_, blocking = false))
     merges.result()
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** the BERT-style vocabulary implied by a training run on `docs`:
     * every initial symbol of the corpus alphabet plus each merge's

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.embed.HashedEmbedder
 import graft.ingest.Ingest
 import graft.search.HybridSearch
@@ -826,11 +826,9 @@ object PipelineQueries {
         // truncates the plan the ~10 references each re-embedded at
         // analysis time. In production the ingest output is a stored
         // table; the checkpoint is the in-session twin. Same rows.
-        // HARNESS-SCOPE release contract: Verify/Bench run
-        // releaseAllBlocks (which drops checkpoint RDD blocks too) after
-        // each query; the library path (api/Engine) stores chunks and
-        // releases its own caches.
-        val chunks = ingestedChunks(s, d).localCheckpoint(true)
+        // Harness scope (graft.core.Materialize); the library path
+        // (api/Engine) stores chunks and releases its own caches.
+        val chunks = Materialize.harness.checkpoint(ingestedChunks(s, d))
         val embedder = new HashedEmbedder(64)
         val qv = typedLit(embedder.embed("spark join stream table").toSeq)
         HybridSearch.search(chunks, qv,

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.ops.TextAnalysis
 
 /** Text-analysis + scalar-function operator queries (SURVEY §2.8 + the
@@ -20,7 +20,7 @@ object TextQueries {
     // one window: ORDER BY suffix, doc_id, pos. -----
     Q("t_suffix_array",
       (s, d) => graft.ops.SuffixArray
-        .build(Tables.documents(s, d), "doc_id", "text")
+        .build(Materialize.harness, Tables.documents(s, d), "doc_id", "text")
         .orderBy("doc_id", "pos"),
       Some("""WITH s AS (SELECT doc_id, t.i - 1 AS pos, substr(text, t.i) AS suf
              |  FROM documents, unnest(range(1, length(text) + 1)) t(i))
@@ -35,7 +35,8 @@ object TextQueries {
     // prefixes — O(n·cap) bytes, corpus-linear) -----
     Q("t_longest_repeat",
       (s, d) => graft.ops.SuffixArray
-        .longestRepeat(Tables.documents(s, d), "doc_id", "text", cap = 64),
+        .longestRepeat(Materialize.harness, Tables.documents(s, d), "doc_id", "text",
+          cap = 64),
       Some("""WITH s AS (SELECT doc_id, t.i - 1 AS pos, substr(text, t.i) AS suf
              |  FROM documents, unnest(range(1, length(text) + 1)) t(i)),
              |o AS (SELECT doc_id, pos, suf,
@@ -64,7 +65,7 @@ object TextQueries {
     // total order the rank doubling converges to). -----
     Q("t_token_suffix_array",
       (s, d) => graft.ops.SuffixArray
-        .buildTokens(Tables.documents(s, d), "doc_id", "text")
+        .buildTokens(Materialize.harness, Tables.documents(s, d), "doc_id", "text")
         .orderBy("doc_id", "pos"),
       Some("""WITH w AS (SELECT doc_id,
              |    regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents),
@@ -79,7 +80,8 @@ object TextQueries {
     // both sides) -----
     Q("t_word_longest_repeat",
       (s, d) => graft.ops.SuffixArray
-        .longestTokenRepeat(Tables.documents(s, d), "doc_id", "text", cap = 32),
+        .longestTokenRepeat(Materialize.harness, Tables.documents(s, d), "doc_id",
+          "text", cap = 32),
       Some("""WITH w AS (SELECT doc_id,
              |    regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents),
              |s AS (SELECT doc_id, t.i - 1 AS pos, ws[t.i:] AS suf

@@ -57,19 +57,29 @@ private[store] trait BucketedIndexStore {
     * keeps the partition columns in the schema, so callers' `isin` filter
     * still applies (and still shows as PartitionFilters — the plan shape
     * PlanSpec pins). Falls back to the full read when no probed directory
-    * exists (empty probe result — the filter then returns no rows). */
+    * exists (empty probe result — the filter then returns no rows), and
+    * an empty `values` goes there without listing anything. Values must be
+    * integral (bucket/list ids): anything else is rejected before it can
+    * reach the glob, where a `*`, `,` or `}` would widen or break it. */
   protected final def prunedPartitionRead(
       tablePath: String, partCol: String, values: Seq[Any]): DataFrame = {
+    values.foreach {
+      case _: Byte | _: Short | _: Int | _: Long => ()
+      case v => throw new IllegalArgumentException(
+        s"prunedPartitionRead: $partCol value $v is not an integral id")
+    }
     // ONE globStatus with a {v1,v2,…} alternation instead of one RPC per
     // probed value (r17 VERDICT #5): driver-side listing RPCs are O(1) per
-    // probe, not O(nProbe) — the values are numeric bucket/list ids by
-    // construction (no glob metacharacters)
-    val alts = values.distinct.mkString(",")
-    val valGlob = if (values.distinct.size == 1) alts else s"{$alts}"
+    // probe, not O(nProbe)
+    val distinct = values.distinct
+    val alts = distinct.mkString(",")
+    val valGlob = if (distinct.size == 1) alts else s"{$alts}"
     val pat =
       if (bucketed) new HPath(s"$tablePath/pbucket=*/$partCol=$valGlob")
       else new HPath(s"$tablePath/$partCol=$valGlob")
-    val dirs = Option(fs.globStatus(pat)).toSeq.flatten.map(_.getPath.toString)
+    val dirs =
+      if (distinct.isEmpty) Seq.empty[String]
+      else Option(fs.globStatus(pat)).toSeq.flatten.map(_.getPath.toString)
     // The probe schema is memoized behind the STATS dir signature, NOT the
     // table's: stats is a few tiny files rewritten LAST by every mutation
     // path (rebuild / appendBatch / refreshBucket — the exists/staleness

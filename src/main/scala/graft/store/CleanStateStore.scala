@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Materialize
 import graft.ops.{CleanCorpus, CleanCorpusConfig, Dedup, TextAnalysis}
 
 /** Per-batch output of [[CleanStateStore.applyBatch]]. The `quality` /
@@ -134,40 +135,36 @@ final class CleanStateStore(
     * every state table from its stage frames — the state is definitionally
     * what the batch funnel computed. Empty corpus still writes (empty)
     * state so a first absorb can bootstrap. */
-  def rebuild(stored: DataFrame, isHoldout: Column): Unit = {
+  def rebuild(stored: DataFrame, isHoldout: Column): Unit = Materialize { m =>
     drop()
-    val (st, release) = CleanCorpus.cleanCorpusReleasable(
-      stored, idCol, textCol, Some(isHoldout), cfg)
-    try {
-      val kept4Ids = st.decontaminated.select(col(idCol))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nRaw = st.corpus.count()
-      val nQuality = st.quality.count()
-      val nExact = st.exactDeduped.count()
-      val nNear = st.nearDeduped.count()
-      val nFinal = kept4Ids.count()
-      DirSwap.swapInto(fs, path, fpsPath)(tmp =>
-        st.exactDeduped.select(
-            TextAnalysis.fingerprint(col(textCol)).as("_fp")).distinct()
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      mh.rebuild(st.exactDeduped.select(col(idCol), col(textCol)), textCol)
-      DirSwap.swapInto(fs, path, kept4Path)(tmp =>
-        kept4Ids.write.mode(SaveMode.Overwrite).parquet(tmp))
-      DirSwap.swapInto(fs, path, holdshPath)(tmp =>
-        stored.filter(isHoldout)
-          .withColumn("_ws", Dedup.wordsArray(textCol))
-          .select(explode(Dedup.wordShingles("_ws", cfg.shingleK)).as("_sh"))
-          .distinct()
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      // postings re-derive the kept2-era shingles from source text (the
-      // derivation is deterministic, so this equals the funnel's _shs)
-      DirSwap.swapInto(fs, path, post4Path)(tmp =>
-        shingled(st.decontaminated)
-          .select(col(idCol), explode(col("_shs")).as("_sh"))
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-      kept4Ids.unpersist()
-      writeStats(nRaw, nQuality, nExact, nNear, nFinal)
-    } finally release()
+    val st = CleanCorpus.cleanCorpus(m, stored, idCol, textCol, Some(isHoldout), cfg)
+    val kept4Ids = m.persist(st.decontaminated.select(col(idCol)),
+      StorageLevel.MEMORY_AND_DISK)
+    val nRaw = st.corpus.count()
+    val nQuality = st.quality.count()
+    val nExact = st.exactDeduped.count()
+    val nNear = st.nearDeduped.count()
+    val nFinal = kept4Ids.count()
+    DirSwap.swapInto(fs, path, fpsPath)(tmp =>
+      st.exactDeduped.select(
+          TextAnalysis.fingerprint(col(textCol)).as("_fp")).distinct()
+        .write.mode(SaveMode.Overwrite).parquet(tmp))
+    mh.rebuild(st.exactDeduped.select(col(idCol), col(textCol)), textCol)
+    DirSwap.swapInto(fs, path, kept4Path)(tmp =>
+      kept4Ids.write.mode(SaveMode.Overwrite).parquet(tmp))
+    DirSwap.swapInto(fs, path, holdshPath)(tmp =>
+      stored.filter(isHoldout)
+        .withColumn("_ws", Dedup.wordsArray(textCol))
+        .select(explode(Dedup.wordShingles("_ws", cfg.shingleK)).as("_sh"))
+        .distinct()
+        .write.mode(SaveMode.Overwrite).parquet(tmp))
+    // postings re-derive the kept2-era shingles from source text (the
+    // derivation is deterministic, so this equals the funnel's _shs)
+    DirSwap.swapInto(fs, path, post4Path)(tmp =>
+      shingled(st.decontaminated)
+        .select(col(idCol), explode(col("_shs")).as("_sh"))
+        .write.mode(SaveMode.Overwrite).parquet(tmp))
+    writeStats(nRaw, nQuality, nExact, nNear, nFinal)
   }
 
   private def writeStats(raw: Long, q: Long, e: Long, n: Long, f: Long): Unit = {
@@ -178,12 +175,6 @@ final class CleanStateStore(
         .toDF("n_raw", "n_quality", "n_exact", "n_near", "n_final")
         .write.mode(SaveMode.Overwrite).parquet(tmp))
   }
-
-  /** handle-less [[applyBatchReleasable]] — run-one-query harnesses only
-    * (the funnel-op caching contract) */
-  def applyBatch(batch: DataFrame, fullCorpus: DataFrame,
-                 isHoldout: Column): DeltaCleanResult =
-    applyBatchReleasable(batch, fullCorpus, isHoldout)._1
 
   /** Clean one sync batch incrementally against the stored state. The
     * result's `survivors` equals what the batch funnel would output on the
@@ -202,9 +193,12 @@ final class CleanStateStore(
     * [[MinhashIndexStore.deltaCandidates]] posture — a sync batch is
     * bounded by the ingest contract), so nothing state-scale ever enters
     * an exchange; the only shuffles are batch-internal (its fingerprint
-    * groupBy, its candidate-pair distinct, the verify join). */
-  def applyBatchReleasable(batch: DataFrame, fullCorpus: DataFrame,
-                           isHoldout: Column): (DeltaCleanResult, () => Unit) = {
+    * groupBy, its candidate-pair distinct, the verify join).
+    *
+    * Every frame the batch persists or checkpoints belongs to `m`: consume
+    * the result (and [[absorb]] it) before the scope closes. */
+  def applyBatch(m: Materialize, batch: DataFrame, fullCorpus: DataFrame,
+                 isHoldout: Column): DeltaCleanResult = {
     require(exists, "applyBatch requires built state (rebuild first)")
     val inCols = batch.columns.map(col).toSeq
 
@@ -221,20 +215,18 @@ final class CleanStateStore(
     // a failure surfaces at the await barrier before `survivors` is built;
     // if the MAIN thread throws first, the forked count is a read-only
     // probe on a daemon thread and completes harmlessly.
-    val batchHoldSh = batch.filter(isHoldout)
+    val batchHoldSh = m.persist(batch.filter(isHoldout)
       .withColumn("_ws", Dedup.wordsArray(textCol))
       .select(explode(Dedup.wordShingles("_ws", cfg.shingleK)).as("_sh"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct(), StorageLevel.MEMORY_AND_DISK)
     // stored live survivors sharing a shingle with the batch's new
     // benchmark shingles lose their survivor status (benchSh only ever
     // grows, so contamination is monotone — probing live survivors with
     // the NEW shingles alone is exact)
-    val revoked = storedPost4()
+    val revoked = m.persist(storedPost4()
       .join(broadcast(batchHoldSh), Seq("_sh"), "left_semi")
       .select(idCol).distinct()
-      .join(storedRevoked(), Seq(idCol), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(storedRevoked(), Seq(idCol), "left_anti"), StorageLevel.MEMORY_AND_DISK)
     val revokedFut = {
       import scala.concurrent.Future
       implicit val ec: scala.concurrent.ExecutionContext = CleanStateStore.stateEc
@@ -242,8 +234,8 @@ final class CleanStateStore(
     }
 
     // --- stage 2: quality (per-row predicate, identical to the funnel) ---
-    val quality = batch.filter(CleanCorpus.qualityPredicate(textCol, cfg))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val quality = m.persist(batch.filter(CleanCorpus.qualityPredicate(textCol, cfg)),
+      StorageLevel.MEMORY_AND_DISK)
 
     // --- stage 3: exact dedup vs stored fingerprints + within-batch ---
     val bfp = quality.withColumn("_fp", TextAnalysis.fingerprint(col(textCol)))
@@ -255,10 +247,9 @@ final class CleanStateStore(
     val notStored = bfp.join(broadcast(hitFps), Seq("_fp"), "left_anti")
     val canonB = notStored.groupBy("_fp").agg(min(col(idCol)).as(idCol))
     val newFps = canonB.select("_fp")
-    val exactNew = notStored
+    val exactNew = m.persist(notStored
       .join(canonB.select(idCol), Seq(idCol), "left_semi")
-      .select(inCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(inCols: _*), StorageLevel.MEMORY_AND_DISK)
 
     // --- stage 4: near-dup drop vs stored survivors + within-batch ---
     // candidates touching the batch, from the stored band table (index
@@ -266,17 +257,16 @@ final class CleanStateStore(
     // involve a batch doc
     val cand =
       if (mh.rowCount() > 0L)
-        mh.deltaCandidates(exactNew.select(col(idCol), col(textCol)), textCol)
+        mh.deltaCandidates(m, exactNew.select(col(idCol), col(textCol)), textCol)
       else Dedup.lshCandidatePairs(
         Dedup.lshBands(
           mh.signatures(exactNew.select(col(idCol), col(textCol)), textCol),
           idCol, "sig", cfg.bands, cfg.rowsPerBand), idCol)
     val candIds = cand.select(col("id_a").as(idCol))
       .union(cand.select(col("id_b").as(idCol))).distinct()
-    val (needed0, relSemi) = Dedup.routedSemiJoinReleasable(
+    val needed = Dedup.routedSemiJoin(m,
       fullCorpus.select(col(idCol), col(textCol)), candIds, idCol)
-    val (verified, relVerify) = Dedup.jaccardOnPairsRoutedReleasable(
-      cand, shingled(needed0), idCol, "_shs")
+    val verified = Dedup.jaccardOnPairsRouted(m, cand, shingled(needed), idCol, "_shs")
     // id_b is always the batch side of a cross pair (batch ids greater),
     // so first-wins can only drop batch docs here — stored survivors are
     // immune to the batch at this stage by construction
@@ -294,15 +284,13 @@ final class CleanStateStore(
     // verify jobs just run here instead of under the consumer's action.
     // The checkpointed set is the batch's near-dup survivors —
     // batch-bounded by the sync contract, never state-scale.
-    val nearNew = exactNew.join(droppedB, Seq(idCol), "left_anti")
-      .localCheckpoint(true)
+    val nearNew = m.checkpoint(exactNew.join(droppedB, Seq(idCol), "left_anti"))
 
     // --- stage 5: decontamination (the non-monotone stage; batchHoldSh —
     // the batch's new benchmark shingles — and the revocation probe were
     // forked before stage 2 and are materializing concurrently) ---
-    val bexpl = shingled(nearNew.filter(!isHoldout))
-      .select(col(idCol), explode(col("_shs")).as("_sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val bexpl = m.persist(shingled(nearNew.filter(!isHoldout))
+      .select(col(idCol), explode(col("_shs")).as("_sh")), StorageLevel.MEMORY_AND_DISK)
     // batch docs contaminated by the STORED benchmark set (state scanned,
     // batch shingles broadcast — same flip as fps) or by the batch's own
     // new benchmark shingles: the two tiny shingle sets fuse into ONE
@@ -313,10 +301,9 @@ final class CleanStateStore(
     val contaminated = bexpl
       .join(broadcast(hitSh.union(batchHoldSh)), Seq("_sh"), "left_semi")
       .select(idCol).distinct()
-    val finalNew = nearNew.filter(!isHoldout)
+    val finalNew = m.persist(nearNew.filter(!isHoldout)
       .join(contaminated, Seq(idCol), "left_anti")
-      .select(idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(idCol), StorageLevel.MEMORY_AND_DISK)
     val finalPostings = bexpl.join(finalNew, Seq(idCol), "left_semi")
 
     // barrier: the forked revocation leg must be materialized (or have
@@ -328,36 +315,23 @@ final class CleanStateStore(
       .join(broadcast(revoked), Seq(idCol), "left_anti")
       .union(finalNew)
 
-    val result = DeltaCleanResult(
+    DeltaCleanResult(
       batchSource = batch,
       quality = quality, exactNew = exactNew, nearNew = nearNew,
       finalNew = finalNew, revoked = revoked, survivors = survivors,
       newFps = newFps, finalPostings = finalPostings,
       batchHoldSh = batchHoldSh)
-    val release = () => {
-      quality.unpersist(blocking = true)
-      exactNew.unpersist(blocking = true)
-      // nearNew is a localCheckpoint — its blocks live on the RDD, not in
-      // the CacheManager (df.unpersist would be a silent no-op)
-      Dedup.checkpointRdd(nearNew).foreach(_.unpersist(blocking = true))
-      batchHoldSh.unpersist(blocking = true)
-      bexpl.unpersist(blocking = true)
-      finalNew.unpersist(blocking = true)
-      revoked.unpersist(blocking = true)
-      relSemi(); relVerify()
-    }
-    (result, release)
   }
 
   /** Absorb one [[applyBatch]] result into the stored state so the NEXT
     * batch cleans against the union — parquet appends plus one stats swap,
     * every write batch-sized (revocations land as tombstones in `revoked/`;
-    * nothing state-scale is rewritten). Call BEFORE the result's release
-    * handle, and treat the result as CONSUMED afterwards: its frames read
+    * nothing state-scale is rewritten). Call inside the scope the result
+    * was built in, and treat the result as CONSUMED afterwards: its frames read
     * the pre-mutation state and re-evaluate wrongly once the state tables
     * have grown (absorb snapshots what it writes, callers get no such
     * protection) — read post-absorb truth from [[survivors]]/[[stageCounts]]. */
-  def absorb(result: DeltaCleanResult): Unit = {
+  def absorb(result: DeltaCleanResult): Unit = Materialize { m =>
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val (raw0, q0, e0, n0, f0) = stageCounts()
@@ -387,35 +361,26 @@ final class CleanStateStore(
     // connectedComponents discipline) instead of re-count jobs.
     def snap(df: DataFrame, name: String): (DataFrame, Long) = {
       val observed = df.observe(s"absorb_$name", count(lit(1)).as("n"))
-      val cp = observed.localCheckpoint(true)
+      val cp = m.checkpoint(observed)
       (cp, observed.queryExecution.observedMetrics(s"absorb_$name").getAs[Long]("n"))
     }
     val fExact = Future(snap(result.exactNew.select(col(idCol), col(textCol)), "exact"))
-    val fFps = Future(result.newFps.localCheckpoint(true))
+    val fFps = Future(m.checkpoint(result.newFps))
     val fK4 = Future(snap(result.finalNew, "k4"))
     val fRev = Future(snap(result.revoked, "rev"))
-    val fHold = Future(result.batchHoldSh.localCheckpoint(true))
-    val fPost = Future(result.finalPostings.localCheckpoint(true))
+    val fHold = Future(m.checkpoint(result.batchHoldSh))
+    val fPost = Future(m.checkpoint(result.finalPostings))
     val fRaw = Future(result.batchSource.count())
     val fQual = Future(result.quality.count())
     val fNear = Future(result.nearNew.count())
     // await EVERY phase-1 future before looking at any failure (ADVICE r17:
-    // rethrowing while siblings still ran leaked their Spark jobs and any
-    // already-completed checkpoint blocks), then unpersist the snapshots
-    // that did complete and rethrow the first failure
+    // rethrowing while siblings still ran leaked their Spark jobs), then
+    // rethrow the first failure — closing the scope frees the snapshots
+    // that did complete
     val phase1: Seq[Future[Any]] =
       Seq(fExact, fFps, fK4, fRev, fHold, fPost, fRaw, fQual, fNear)
-    val tried = phase1.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    tried.collectFirst { case scala.util.Failure(t) => t }.foreach { t =>
-      tried.foreach {
-        case scala.util.Success(df: org.apache.spark.sql.Dataset[_]) =>
-          df.unpersist(blocking = false): Unit
-        case scala.util.Success((df: org.apache.spark.sql.Dataset[_], _)) =>
-          df.unpersist(blocking = false): Unit
-        case _ => ()
-      }
-      throw t
-    }
+    phase1.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      .collectFirst { case scala.util.Failure(t) => t }.foreach(t => throw t)
     // all succeeded — each value below reads instantly off its future
     def got[T](f: Future[T]): T = Await.result(f, Duration.Inf)
     val (exactSnap, eN) = got(fExact)
@@ -425,40 +390,35 @@ final class CleanStateStore(
     val holdSnap = got(fHold)
     val postSnap = got(fPost)
     val (rawN, qN, nN, fN) = (got(fRaw), got(fQual), got(fNear), fN4)
-    try {
-      // --- phase 2: the state appends — each targets its own directory
-      // and reads only snapshotted frames (holdsh additionally reads its
-      // own pre-append state, which nothing else touches), so all six are
-      // independent and run concurrently
-      await(Seq(
-        Future { mh.appendBatch(exactSnap, textCol): Unit },
-        Future { fpsSnap.write.mode(SaveMode.Append).parquet(fpsPath) },
-        Future { k4Snap.write.mode(SaveMode.Append).parquet(kept4Path) },
-        Future {
-          if (rN > 0L)
-            revSnap.write.mode(SaveMode.Append).parquet(revokedPath)
-        },
-        Future {
-          // keep holdsh a SET: append only the genuinely new shingles
-          // (overlap computed with the same scan+broadcast flip as the
-          // probes)
-          val overlap = storedHoldSh()
-            .join(broadcast(holdSnap), Seq("_sh"), "left_semi")
-          holdSnap.join(broadcast(overlap), Seq("_sh"), "left_anti")
-            .write.mode(SaveMode.Append).parquet(holdshPath)
-        },
-        Future { postSnap.write.mode(SaveMode.Append).parquet(post4Path) }))
-      // --- phase 3: stats LAST (the exists/staleness discipline — a
-      // reader must never observe new stats over half-appended state)
-      writeStats(raw0 + rawN, q0 + qN, e0 + eN, n0 + nN, f0 - rN + fN)
-      // the session's shared file-status cache may still hold PRE-append
-      // listings for these paths (all were read during applyBatch); a
-      // post-absorb reader would silently miss the appended files
-      spark.catalog.refreshByPath(path)
-    } finally {
-      Seq(exactSnap, fpsSnap, k4Snap, revSnap, holdSnap, postSnap)
-        .foreach(_.unpersist(blocking = true))
-    }
+    // --- phase 2: the state appends — each targets its own directory
+    // and reads only snapshotted frames (holdsh additionally reads its
+    // own pre-append state, which nothing else touches), so all six are
+    // independent and run concurrently
+    await(Seq(
+      Future { mh.appendBatch(exactSnap, textCol): Unit },
+      Future { fpsSnap.write.mode(SaveMode.Append).parquet(fpsPath) },
+      Future { k4Snap.write.mode(SaveMode.Append).parquet(kept4Path) },
+      Future {
+        if (rN > 0L)
+          revSnap.write.mode(SaveMode.Append).parquet(revokedPath)
+      },
+      Future {
+        // keep holdsh a SET: append only the genuinely new shingles
+        // (overlap computed with the same scan+broadcast flip as the
+        // probes)
+        val overlap = storedHoldSh()
+          .join(broadcast(holdSnap), Seq("_sh"), "left_semi")
+        holdSnap.join(broadcast(overlap), Seq("_sh"), "left_anti")
+          .write.mode(SaveMode.Append).parquet(holdshPath)
+      },
+      Future { postSnap.write.mode(SaveMode.Append).parquet(post4Path) }))
+    // --- phase 3: stats LAST (the exists/staleness discipline — a
+    // reader must never observe new stats over half-appended state)
+    writeStats(raw0 + rawN, q0 + qN, e0 + eN, n0 + nN, f0 - rN + fN)
+    // the session's shared file-status cache may still hold PRE-append
+    // listings for these paths (all were read during applyBatch); a
+    // post-absorb reader would silently miss the appended files
+    spark.catalog.refreshByPath(path)
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.ops.Sketches
 
 /** Persisted corpus-statistics sketches — the monitoring sibling of the
@@ -85,7 +86,7 @@ final class SketchStore(spark: SparkSession, path: String,
   }
 
   private def appendCached(batch: DataFrame, keyCol: String,
-                           textCol: String): Unit = {
+                           textCol: String): Unit = Materialize { m =>
     val batchHll = Sketches.hllRegisters(batch, col(keyCol), b)
     val words = batch.select(explode(graft.ops.Dedup.wordsArray(textCol)).as("w"))
     val batchCms = Sketches.cmsSketch(words, col("w"), depth, width)
@@ -102,8 +103,8 @@ final class SketchStore(spark: SparkSession, path: String,
       } else (batchHll, batchCms, 1L, batch.count())
     // sketches are bounded (2^b / depth·width rows): localCheckpoint cuts
     // the union lineage BEFORE the swap replaces the parquet being read
-    val hllSnap = hll.localCheckpoint(true)
-    val cmsSnap = cms.localCheckpoint(true)
+    val hllSnap = m.checkpoint(hll)
+    val cmsSnap = m.checkpoint(cms)
     // all three tables land in one tmp dir and swap in with a SINGLE
     // rename — individually-atomic per-table swaps would still let a crash
     // between them pair a new hll/ with a stale cms/stats

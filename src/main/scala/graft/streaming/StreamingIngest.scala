@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import scala.jdk.CollectionConverters._
 
 import graft.chunker.MaxMinChunker
+import graft.core.Materialize
 import graft.core.ChunkSchema.ChunkRow
 import graft.embed.Embedder
 import graft.ingest.Ingest
@@ -939,14 +940,17 @@ object StreamingIngest {
             val nRows = if (JFiles.exists(marker)) 0L else batch.count()
             if (!JFiles.exists(marker) && nRows > 0) {
               batchesWithRows += 1
-              val cands = (
-                if (st.exists) st.deltaCandidates(batch)
-                else { // first batch: no stored side yet, in-batch pairs only
-                  val sigs = st.signatures(batch)
-                  graft.ops.Dedup.lshCandidatePairs(
-                    graft.ops.Dedup.lshBands(sigs, "doc_id", "sig", 4, 4), "doc_id")
-                }).persist()
-              try {
+              // every persist and checkpoint of this micro-batch's verify
+              // is scoped to it — one leaked block per batch would
+              // accumulate for the stream's lifetime
+              Materialize { m =>
+                val cands = m.persist(
+                  if (st.exists) st.deltaCandidates(m, batch)
+                  else { // first batch: no stored side yet, in-batch pairs only
+                    val sigs = st.signatures(batch)
+                    graft.ops.Dedup.lshCandidatePairs(
+                      graft.ops.Dedup.lshBands(sigs, "doc_id", "sig", 4, 4), "doc_id")
+                  }, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
                 if (cands.take(1).nonEmpty) {
                   val candIds = cands.select(col("id_a").as("doc_id"))
                     .union(cands.select(col("id_b").as("doc_id"))).distinct()
@@ -958,27 +962,20 @@ object StreamingIngest {
                         .unionByName(spark.read.parquet(docsDir).select("doc_id", "text"))
                     else batch.select("doc_id", "text")
                   // count-and-route like the batch twin: broadcast only a
-                  // measured-bounded id set, shuffle-semi otherwise. Both
-                  // routed joins run ONCE PER MICRO-BATCH — take the
-                  // release handles and unpersist after the pair write (the
-                  // batch's terminal action), else one cached id block and
-                  // one pair block leak per batch for the stream's lifetime
-                  val (needed0, releaseIds) = graft.ops.Dedup
-                    .routedSemiJoinReleasable(lookup, candIds, "doc_id")
-                  val needed = needed0
+                  // measured-bounded id set, shuffle-semi otherwise
+                  val needed = graft.ops.Dedup
+                    .routedSemiJoin(m, lookup, candIds, "doc_id")
                     .withColumn("ws", graft.ops.Dedup.wordsArray("text"))
                     .withColumn("shs", graft.ops.Dedup.wordShingles("ws", 5))
                   // r13: the verify shape is measured-routed too — a batch
                   // landing in an adversarial twin regime re-routes onto
                   // the posting join instead of carrying arrays per pair
-                  val (verified, releasePairs) = graft.ops.Dedup
-                    .jaccardOnPairsRoutedReleasable(cands, needed, "doc_id", "shs")
-                  try
-                    verified.filter(col("jaccard") >= threshold)
-                      .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-                  finally { releasePairs(); releaseIds() }
+                  graft.ops.Dedup
+                    .jaccardOnPairsRouted(m, cands, needed, "doc_id", "shs")
+                    .filter(col("jaccard") >= threshold)
+                    .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
                 }
-              } finally cands.unpersist()
+              }
               batch.select("doc_id", "text").write.mode("overwrite")
                 .parquet(s"$docsDir/batch=$batchId")
               st.appendBatch(batch): Unit
@@ -1039,7 +1036,7 @@ object StreamingIngest {
     * trigger — the id ordering is what makes first-wins monotone across
     * micro-batches), each foreachBatch cleans the arriving batch against
     * the persisted [[graft.store.CleanStateStore]] via
-    * `applyBatchReleasable` and folds it in via `absorb`, including the
+    * `applyBatch` and folds it in via `absorb`, including the
     * revocation edge (a later batch's holdout docs can retract earlier
     * survivors). State bootstraps from an EMPTY rebuild, so batch 0 runs
     * the same delta protocol as every other batch (spec-pinned: the first
@@ -1107,8 +1104,7 @@ object StreamingIngest {
                   batch.unionByName(
                     spark.read.parquet(docsDir).select("doc_id", "text"))
                 else batch
-              val (r, release) = st.applyBatchReleasable(batch, full, isHoldout)
-              try st.absorb(r) finally release()
+              Materialize(m => st.absorb(st.applyBatch(m, batch, full, isHoldout)))
               batch.write.mode("overwrite").parquet(s"$docsDir/batch=$batchId")
               JFiles.createFile(marker): Unit
               System.err.println(s"[stream-pipe] batch=$batchId rows=$nRows " +

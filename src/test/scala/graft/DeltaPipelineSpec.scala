@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Materialize}
 import graft.ops.CleanCorpus
 import graft.store.CleanStateStore
 
@@ -24,7 +24,7 @@ import graft.store.CleanStateStore
   *  - a second absorbed batch, so state-append (fps, bands, postings,
   *    tombstones, stats) is verified against the three-way union funnel.
   */
-class DeltaPipelineSpec extends AnyFunSuite {
+class DeltaPipelineSpec extends AnyFunSuite with ScopedTests {
 
   private lazy val spark = GraftSession.local(4)
   import spark.implicits._
@@ -48,10 +48,10 @@ class DeltaPipelineSpec extends AnyFunSuite {
 
   // the batch funnel on any corpus — the ground truth every increment
   // must reproduce
-  private def funnel(corpus: DataFrame, hold: Column) =
-    CleanCorpus.cleanCorpus(corpus, "doc_id", "text", Some(hold))
+  private def funnel(m: Materialize, corpus: DataFrame, hold: Column) =
+    CleanCorpus.cleanCorpus(m, corpus, "doc_id", "text", Some(hold))
 
-  test("applyBatch equals the union funnel at every stage, revocation included") {
+  scopedTest("applyBatch equals the union funnel at every stage, revocation included") { m =>
     val holdoutIds = Set(5L, 250L)
     val hold = col("doc_id").isin(holdoutIds.toSeq: _*)
 
@@ -78,7 +78,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
       208L -> words("iota")))
 
     val union = stored.union(batch)
-    val truth = funnel(union, hold)
+    val truth = funnel(m, union, hold)
 
     val st = new CleanStateStore(spark, tmpDir("delta-pipe"))
     st.rebuild(stored, hold)
@@ -86,7 +86,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
     // the stored funnel admitted doc 1 (nothing contaminated it yet)
     assert(ids(st.survivors()).contains(1L))
 
-    val r = st.applyBatch(batch, union, hold)
+    val r = st.applyBatch(m, batch, union, hold)
 
     val batchIds = ids(batch)
     assert(ids(r.quality) === ids(truth.quality).intersect(batchIds))
@@ -111,7 +111,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
     assert(!ids(r.survivors).contains(1L))
   }
 
-  test("degenerate batches: empty, all-filtered, and all-holdout") {
+  scopedTest("degenerate batches: empty, all-filtered, and all-holdout") { m =>
     val hold = col("doc_id").isin(5L, 260L)
     val stored = df(Seq(
       1L -> words("alpha"), 2L -> words("beta"), 5L -> words("bench")))
@@ -121,7 +121,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
 
     // empty batch: everything empty, survivors unchanged
     val empty = df(Seq.empty)
-    val r0 = st.applyBatch(empty, stored, hold)
+    val r0 = st.applyBatch(m, empty, stored, hold)
     assert(ids(r0.finalNew).isEmpty && ids(r0.revoked).isEmpty)
     assert(ids(r0.survivors) === storedSurvivors)
     st.absorb(r0) // must not throw or corrupt state
@@ -129,12 +129,12 @@ class DeltaPipelineSpec extends AnyFunSuite {
 
     // all rows fail quality: same as empty past stage 2
     val junk = df(Seq(210L -> "x", 211L -> "tiny"))
-    val r1 = st.applyBatch(junk, stored.union(junk), hold)
+    val r1 = st.applyBatch(m, junk, stored.union(junk), hold)
     assert(ids(r1.quality).isEmpty && ids(r1.survivors) === storedSurvivors)
 
     // all-holdout batch: nothing admitted, but its shingles can revoke
     val holdBatch = df(Seq(260L -> (words("alpha", 10) + " " + words("nu", 20))))
-    val r2 = st.applyBatch(holdBatch, stored.union(holdBatch), hold)
+    val r2 = st.applyBatch(m, holdBatch, stored.union(holdBatch), hold)
     assert(ids(r2.finalNew).isEmpty)
     assert(ids(r2.revoked) === Set(1L))
     assert(ids(r2.survivors) === storedSurvivors - 1L)
@@ -142,7 +142,7 @@ class DeltaPipelineSpec extends AnyFunSuite {
     assert(ids(st.survivors()) === storedSurvivors - 1L)
   }
 
-  test("empty stored corpus: rebuild bootstraps, the first batch is the funnel") {
+  scopedTest("empty stored corpus: rebuild bootstraps, the first batch is the funnel") { m =>
     val hold = col("doc_id").isin(5L)
     val st = new CleanStateStore(spark, tmpDir("delta-bootstrap"))
     st.rebuild(df(Seq.empty), hold)
@@ -152,14 +152,14 @@ class DeltaPipelineSpec extends AnyFunSuite {
       201L -> words("zeta"),
       202L -> words("zeta"), // exact dup within the first batch
       5L -> words("bench")))  // holdout member
-    val truth = funnel(batch, hold)
-    val r = st.applyBatch(batch, batch, hold)
+    val truth = funnel(m, batch, hold)
+    val r = st.applyBatch(m, batch, batch, hold)
     assert(ids(r.survivors) === ids(truth.decontaminated))
     st.absorb(r)
     assert(ids(st.survivors()) === ids(truth.decontaminated))
   }
 
-  test("streaming replay equals the batch funnel (revocation across micro-batches)") {
+  scopedTest("streaming replay equals the batch funnel (revocation across micro-batches)") { m =>
     // ids spread so the 4 ascending slices land: {1,2,5,8} | {201..203} |
     // {301..305} | {401} — doc 305 (holdout) arrives two batches after
     // stored survivor 8 and must retract it through the stream's absorb
@@ -175,13 +175,13 @@ class DeltaPipelineSpec extends AnyFunSuite {
       401L -> words("omega")))
     val got = graft.streaming.StreamingIngest
       .cleanPipelineAvailableNow(spark, corpus, hold, numFiles = 4)
-    val truth = funnel(corpus, hold)
+    val truth = funnel(m, corpus, hold)
     assert(ids(got) === ids(truth.decontaminated))
     assert(!ids(got).contains(8L), "late-arriving holdout must revoke doc 8")
     assert(ids(got).contains(401L))
   }
 
-  test("absorbed batches chain: two increments equal the three-way union funnel") {
+  scopedTest("absorbed batches chain: two increments equal the three-way union funnel") { m =>
     val hold = col("doc_id").isin(5L, 305L)
     val stored = df(Seq(
       1L -> words("alpha"),
@@ -201,15 +201,15 @@ class DeltaPipelineSpec extends AnyFunSuite {
     val st = new CleanStateStore(spark, tmpDir("delta-chain"))
     st.rebuild(stored, hold)
 
-    val r1 = st.applyBatch(batch1, stored.union(batch1), hold)
-    val u2 = ids(funnel(stored.union(batch1), hold).decontaminated)
+    val r1 = st.applyBatch(m, batch1, stored.union(batch1), hold)
+    val u2 = ids(funnel(m, stored.union(batch1), hold).decontaminated)
     assert(ids(r1.survivors) === u2)
     st.absorb(r1)
     assert(ids(st.survivors()) === u2, "absorbed state must serve the union survivors")
 
     val union3 = stored.union(batch1).union(batch2)
-    val r2 = st.applyBatch(batch2, union3, hold)
-    val truth3 = funnel(union3, hold)
+    val r2 = st.applyBatch(m, batch2, union3, hold)
+    val truth3 = funnel(m, union3, hold)
     assert(ids(r2.survivors) === ids(truth3.decontaminated))
     assert(!ids(r2.exactNew).contains(301L),
       "exact dedup must see ABSORBED batch1 fingerprints")

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Materialize}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with ScopedTests {
 
   private lazy val spark = GraftSession.local(4)
   import spark.implicits._
@@ -71,10 +71,8 @@ class OpsSpec extends AnyFunSuite {
       (2L, "p q r s"),
       (3L, "u v"),
       (4L, "c d e")).toDF("doc_id", "text")
-    val (out, release) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3)
-    val got = out.orderBy("doc_id")
-      .as[(Long, Long, Long, Long, String)].collect()
-    release()
+    val got = Materialize(m => Dedup.spanDedup(m, rows, "doc_id", "text", 3)
+      .orderBy("doc_id").as[(Long, Long, Long, Long, String)].collect())
     val want = Seq(
       (0L, 5L, 0L, 5L, ""),          // starts 0 ("a b c") and 2 ("c d e") cover 0-4
       (1L, 5L, 2L, 3L, "x y"),
@@ -88,21 +86,20 @@ class OpsSpec extends AnyFunSuite {
     // pass-through and covered docs ride the join — results byte-identical
     // to the pinned single-join route, and both caches released
     val floor = spark.sparkContext.parallelize(Seq(0), 1).id
-    val (outS, releaseS) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3,
+    val gotS = Materialize(m => Dedup.spanDedup(m, rows, "doc_id", "text", 3,
       splitMaxCoveredFraction = 0.9)
-    val gotS = outS.orderBy("doc_id")
-      .as[(Long, Long, Long, Long, String)].collect()
-    releaseS()
+      .orderBy("doc_id").as[(Long, Long, Long, Long, String)].collect())
     assert(gotS === want, "split route must match the single-join route")
     val leftS = spark.sparkContext.getPersistentRDDs.keys.filter(_ >= floor)
     assert(leftS.isEmpty, s"split route leaked persisted blocks: ${leftS.mkString(",")}")
     // a fraction knob below the corpus's covered fraction falls back to
     // the single join (and still releases the measurement persist)
-    val (outF, releaseF) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3,
-      splitMaxCoveredFraction = 0.1)
-    assert(outF.orderBy("doc_id")
-      .as[(Long, Long, Long, Long, String)].collect() === want)
-    releaseF()
+    Materialize { m =>
+      val outF = Dedup.spanDedup(m, rows, "doc_id", "text", 3,
+        splitMaxCoveredFraction = 0.1)
+      assert(outF.orderBy("doc_id")
+        .as[(Long, Long, Long, Long, String)].collect() === want)
+    }
   }
 
   test("url canonicalization: ports, params, tracking, fragments, slashes") {
@@ -236,12 +233,12 @@ class OpsSpec extends AnyFunSuite {
       s"PQ shortlist missed too many true neighbors: ${brute.diff(shortlist)}")
   }
 
-  test("suffix array: distributed prefix doubling equals a driver-side sort") {
+  scopedTest("suffix array: distributed prefix doubling equals a driver-side sort") { m =>
     import graft.ops.SuffixArray
     val docs = Seq(
       (0L, "banana"), (1L, "bandana"), (2L, "an"), (3L, "banana"), // 0 ≡ 3
       (4L, ""), (5L, "x")).toDF("doc_id", "text")
-    val got = SuffixArray.build(docs, "doc_id", "text")
+    val got = SuffixArray.build(m, docs, "doc_id", "text")
       .as[(Long, Long, Long)].collect().toSeq.sorted
     // independent reference: materialize every suffix and sort
     val data = Map(0L -> "banana", 1L -> "bandana", 2L -> "an",
@@ -256,18 +253,18 @@ class OpsSpec extends AnyFunSuite {
     // already proves the tie-break order
 
     // longest repeat: "anana" is shared between doc 0 and doc 3 at pos 1
-    val best = SuffixArray.longestRepeat(docs, "doc_id", "text")
+    val best = SuffixArray.longestRepeat(m, docs, "doc_id", "text")
       .as[(Long, String, Long, Long, Long, Long)].collect().head
     assert(best === ((6L, "banana", 0L, 0L, 3L, 0L)))
     // cap truncates: with cap=3 the same pair reports lcp 3
-    val capped = SuffixArray.longestRepeat(docs, "doc_id", "text", cap = 3)
+    val capped = SuffixArray.longestRepeat(m, docs, "doc_id", "text", cap = 3)
       .as[(Long, String, Long, Long, Long, Long)].collect().head
     assert(capped._1 === 3L && capped._2 === "ban")
 
     // token-level: same core over word sequences
     val tdocs = Seq((0L, "the cat sat on the mat"),
       (1L, "a cat sat on the mat today"), (2L, "dogs")).toDF("doc_id", "text")
-    val gotT = SuffixArray.buildTokens(tdocs, "doc_id", "text")
+    val gotT = SuffixArray.buildTokens(m, tdocs, "doc_id", "text")
       .as[(Long, Long, Long)].collect().toSeq.sorted
     val tdata = Map(0L -> Seq("the", "cat", "sat", "on", "the", "mat"),
       1L -> Seq("a", "cat", "sat", "on", "the", "mat", "today"),
@@ -280,12 +277,12 @@ class OpsSpec extends AnyFunSuite {
         .map { case ((_, id, p), r) => (id, p, r.toLong) }.sorted
     }
     assert(gotT === refT)
-    val bestT = SuffixArray.longestTokenRepeat(tdocs, "doc_id", "text")
+    val bestT = SuffixArray.longestTokenRepeat(m, tdocs, "doc_id", "text")
       .as[(Long, String, Long, Long, Long, Long)].collect().head
     assert(bestT === ((5L, "cat sat on the mat", 0L, 1L, 1L, 1L)))
   }
 
-  test("suffix array equals a driver-side sort on random corpora (property)") {
+  scopedTest("suffix array equals a driver-side sort on random corpora (property)") { m =>
     import graft.ops.SuffixArray
     import org.scalacheck.Gen
     // small alphabet + short docs force heavy rank ties, duplicate
@@ -299,7 +296,7 @@ class OpsSpec extends AnyFunSuite {
     var seed = org.scalacheck.rng.Seed(11L)
     for (_ <- 0 until 8) {
       gen.apply(Gen.Parameters.default, seed).foreach { data =>
-        val got = SuffixArray.build(data.toDF("doc_id", "text"), "doc_id", "text")
+        val got = SuffixArray.build(m, data.toDF("doc_id", "text"), "doc_id", "text")
           .as[(Long, Long, Long)].collect().toSeq.sorted
         val ref = (for ((id, t) <- data; p <- 0 until t.length)
             yield (t.substring(p), id, p.toLong))
@@ -412,7 +409,7 @@ class OpsSpec extends AnyFunSuite {
     assert(raw.length === 6) // 3 copies of id 1 × 2 of id 2 — the documented hazard
   }
 
-  test("routedPairJoin: shuffle route matches broadcast route exactly") {
+  scopedTest("routedPairJoin: shuffle route matches broadcast route exactly") { m =>
     // the verify-stage size routing must be a physical-strategy choice only:
     // identical pairs in, identical verified rows out on both routes
     val docs = (0 until 40).map(i =>
@@ -420,16 +417,16 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "shs")
     val pairs = (for (a <- 0 until 40; b <- a + 1 until 40; if a % 5 == b % 5)
       yield (a.toLong, b.toLong)).toDF("id_a", "id_b")
-    val viaBroadcast = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs")
+    val viaBroadcast = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaShuffle = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs",
+    val viaShuffle = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs",
       maxBroadcastPairs = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaBroadcast === viaShuffle)
     assert(viaBroadcast.nonEmpty)
   }
 
-  test("jaccardOnPairs over hashed shingles equals the exact string-set value") {
+  scopedTest("jaccardOnPairs over hashed shingles equals the exact string-set value") { m =>
     // the verify leg carries xxhash64(shingle) longs, not the strings — the
     // emitted jaccard must equal the exact set computation on the strings
     // (the DuckDB oracle's semantics) on every pair, including skewed set
@@ -444,7 +441,7 @@ class OpsSpec extends AnyFunSuite {
     val docs = raw.toDF("doc_id", "shs")
     val pairs = (for (a <- raw.map(_._1); b <- raw.map(_._1); if a < b)
       yield (a, b)).toDF("id_a", "id_b")
-    val got = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs")
+    val got = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val sets = raw.map { case (id, shs) => id -> shs.toSet }.toMap
     for (((a, b), j) <- got) {
@@ -457,10 +454,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("routed-join release handles leave no persisted blocks, both routes") {
-    // the releasable variants exist for long-lived sessions: after the
-    // caller's terminal action + release(), the session must hold NO cached
-    // blocks from the routed join (getPersistentRDDs back to baseline) —
-    // on the broadcast route AND the shuffle route of all three entry points
+    // long-lived sessions: after the caller's terminal action and the
+    // scope's close, the session must hold NO cached blocks from the routed
+    // join (getPersistentRDDs back to baseline) — on the broadcast route
+    // AND the shuffle route of all three entry points
     val docs = (0 until 30).map(i =>
       (i.toLong, (0 until 8).map(j => s"sh_${(i % 3)}_$j"))).toDF("doc_id", "shs")
     val pairs = (for (a <- 0 until 30; b <- a + 1 until 30; if a % 3 == b % 3)
@@ -469,29 +466,31 @@ class OpsSpec extends AnyFunSuite {
       .union(pairs.select(col("id_b").as("doc_id"))).distinct()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     for (limit <- Seq(-1L, 0L)) { // -1 → conf default (broadcast), 0 → shuffle
-      val (verified, relPairs) =
-        Dedup.jaccardOnPairsReleasable(pairs, docs, "doc_id", "shs", limit)
-      assert(verified.count() > 0)
-      relPairs()
-      val (semi, relIds) =
-        Dedup.routedSemiJoinReleasable(docs, ids, "doc_id", limit)
-      assert(semi.count() > 0)
-      relIds()
+      Materialize { m =>
+        val verified = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs", limit)
+        assert(verified.count() > 0)
+      }
+      Materialize { m =>
+        val semi = Dedup.routedSemiJoin(m, docs, ids, "doc_id", limit)
+        assert(semi.count() > 0)
+      }
       assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
         s"persisted blocks leaked at maxBroadcastPairs=$limit")
     }
     // the posting-persisting operators release the same way
-    val (jp, relJp) = Dedup.jaccardPairsReleasable(docs, "doc_id", "shs", 0.1)
-    assert(jp.count() > 0)
-    relJp()
-    val (cov, relCov) = Dedup.dupGramCoverageReleasable(docs, "doc_id", "shs")
-    assert(cov.count() > 0)
-    relCov()
+    Materialize { m =>
+      val jp = Dedup.jaccardPairs(m, docs, "doc_id", "shs", 0.1)
+      assert(jp.count() > 0)
+    }
+    Materialize { m =>
+      val cov = Dedup.dupGramCoverage(m, docs, "doc_id", "shs")
+      assert(cov.count() > 0)
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
       "posting blocks leaked")
   }
 
-  test("routed verify: posting route equals pair-carry route pair-for-pair") {
+  scopedTest("routed verify: posting route equals pair-carry route pair-for-pair") { m =>
     // r13: jaccardOnPairsRouted may re-route the verify onto a posting join
     // when pair mass dominates candidate-doc mass. The two shapes must emit
     // IDENTICAL (id_a, id_b, jaccard) rows — including candidate pairs that
@@ -508,9 +507,9 @@ class OpsSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val carry = rows(Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
+    val carry = rows(Dedup.jaccardOnPairsRouted(m, pairs, docs, "doc_id", "shs",
       postingFactor = 1e18)) // pin the pair carry
-    val posting = rows(Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
+    val posting = rows(Dedup.jaccardOnPairsRouted(m, pairs, docs, "doc_id", "shs",
       postingFactor = 0.0)) // force the posting route
     assert(carry === posting)
     assert(carry.exists { case (a, b, j) => (a, b) == (0L, 1L) && j == 0.0 },
@@ -518,13 +517,13 @@ class OpsSpec extends AnyFunSuite {
     assert(!carry.exists { case (_, b, _) => b == 999L },
       "pair with an id absent from the payload must drop on both routes")
     // and the posting route under the SHUFFLE semi-join leg too
-    val postingShuffle = rows(Dedup.jaccardOnPairsRouted(pairs, docs,
+    val postingShuffle = rows(Dedup.jaccardOnPairsRouted(m, pairs, docs,
       "doc_id", "shs", maxBroadcastPairs = 0L, postingFactor = 0.0))
     assert(postingShuffle === carry)
     // the RAW stats core agrees too (containment consumes _inter/_n_a/_n_b
     // directly, so jaccard equality alone would not pin the denominators)
     def stats(factor: Double) =
-      Dedup.pairStatsRouted(pairs, docs, "doc_id", "shs", postingFactor = factor)
+      Dedup.pairStatsRouted(m, pairs, docs, "doc_id", "shs", postingFactor = factor)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) 0L else r.getLong(2).longValue,
           r.getInt(3), r.getInt(4))).toSet
@@ -538,7 +537,7 @@ class OpsSpec extends AnyFunSuite {
     assert(stats(10.0) === stats(1e18))
   }
 
-  test("routed verify: duplicate-element shingles score identically on both routes") {
+  scopedTest("routed verify: duplicate-element shingles score identically on both routes") { m =>
     // ADVICE r13: the carry route sized the raw hashed array while the
     // posting route sized array_distinct of it — a caller passing shingles
     // with duplicate elements got route-dependent _n/jaccard. Both routes
@@ -549,7 +548,7 @@ class OpsSpec extends AnyFunSuite {
     ).toDF("doc_id", "shs")
     val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
     def j(factor: Double) =
-      Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
+      Dedup.jaccardOnPairsRouted(m, pairs, docs, "doc_id", "shs",
         postingFactor = factor).collect().map(_.getDouble(2)).toSeq
     val pinned = j(1e18)   // pinned carry (measurement skipped)
     val measured = j(10.0) // measured carry
@@ -561,7 +560,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("routed verify: posting-route release leaves no persisted blocks") {
     // the posting route persists the pair list, the semi-join id set, and
-    // the candidate-doc hashed projection — the release handle must drop
+    // the candidate-doc hashed projection — closing the scope must drop
     // all three (the same session-hygiene gate as the pair-carry twins)
     val docs = (0 until 30).map(i =>
       (i.toLong, (0 until 8).map(j => s"sh_${(i % 3)}_$j"))).toDF("doc_id", "shs")
@@ -569,10 +568,11 @@ class OpsSpec extends AnyFunSuite {
       yield (a.toLong, b.toLong)).toDF("id_a", "id_b")
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     for (limit <- Seq(-1L, 0L)) {
-      val (verified, rel) = Dedup.jaccardOnPairsRoutedReleasable(
-        pairs, docs, "doc_id", "shs", limit, postingFactor = 0.0)
-      assert(verified.count() > 0)
-      rel()
+      Materialize { m =>
+        val verified = Dedup.jaccardOnPairsRouted(m,
+          pairs, docs, "doc_id", "shs", limit, postingFactor = 0.0)
+        assert(verified.count() > 0)
+      }
       assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
         s"posting-route blocks leaked at maxBroadcastPairs=$limit")
     }
@@ -580,10 +580,11 @@ class OpsSpec extends AnyFunSuite {
     // both the pinned leg (measurement skipped) and the measured leg
     // (which keeps ONE persisted pair list for the carry join)
     for (factor <- Seq(1e18, 1e6)) {
-      val (v2, rel2) = Dedup.jaccardOnPairsRoutedReleasable(
-        pairs, docs, "doc_id", "shs", postingFactor = factor)
-      assert(v2.count() > 0)
-      rel2()
+      Materialize { m =>
+        val v2 = Dedup.jaccardOnPairsRouted(m,
+          pairs, docs, "doc_id", "shs", postingFactor = factor)
+        assert(v2.count() > 0)
+      }
       assert(spark.sparkContext.getPersistentRDDs.keySet === baseline,
         s"pair-carry blocks leaked through the routed entry at factor=$factor")
     }
@@ -1563,7 +1564,7 @@ class OpsSpec extends AnyFunSuite {
     assert(picks === picks.sorted.reverse)
   }
 
-  test("nearDupPairsAt: verified precision is exact and banded recall meets the s-curve promise") {
+  scopedTest("nearDupPairsAt: verified precision is exact and banded recall meets the s-curve promise") { m =>
     // clustered corpora across thresholds 0.5–0.9: members of a cluster are
     // the base shingle set with k replacements, giving a spread of true
     // Jaccard values around each threshold. The pipeline is deterministic
@@ -1587,7 +1588,7 @@ class OpsSpec extends AnyFunSuite {
     for (t <- Seq(0.5, 0.6, 0.7, 0.8, 0.9)) {
       val docs = corpus(nClusters = 4, perCluster = 6)
       val df = docs.map { case (i, s) => (i, s.toSeq) }.toDF("id", "shs")
-      val got = Dedup.nearDupPairsAt(df, "id", "shs", t)
+      val got = Dedup.nearDupPairsAt(m, df, "id", "shs", t)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
       val byId = docs.toMap
       // precision is EXACT modulo the 4-decimal rounding the operator
@@ -1615,7 +1616,7 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponents equals a union-find reference on random graphs (property)") {
+  scopedTest("connectedComponents equals a union-find reference on random graphs (property)") { m =>
     import org.scalacheck.Gen
     def forAll[T](gen: Gen[T], n: Int = 12)(f: T => Unit): Unit = {
       var seed = org.scalacheck.rng.Seed(7L)
@@ -1648,47 +1649,41 @@ class OpsSpec extends AnyFunSuite {
     } yield edges
     forAll(gen) { edges =>
       if (edges.nonEmpty) {
-        val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+        val got = Dedup.connectedComponents(m, edges.toDF("id_a", "id_b"))
           .as[(Long, Long)].collect().toMap
         assert(got === unionFind(edges), s"edges=$edges")
       }
     }
   }
 
-  test("connectedComponents: empty edge set converges to empty labels") {
+  scopedTest("connectedComponents: empty edge set converges to empty labels") { m =>
     // r17: the convergence count is an observed metric on the checkpoint
     // job (sum over an empty label table is NULL — the coalesce must read
     // it as converged, and the loop must terminate without a count job)
-    val labels = Dedup.connectedComponents(
+    val labels = Dedup.connectedComponents(m,
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
-    try assert(labels.count() === 0L)
-    finally labels.unpersist()
+    assert(labels.count() === 0L)
   }
 
-  test("connectedComponents: chains close transitively, min id is the rep") {
+  scopedTest("connectedComponents: chains close transitively, min id is the rep") { m =>
     // two components: a chain 1-2-3-4 (no direct 1-4 pair) and a pair 10-11
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(edges)
-    try {
-      val m = comp.as[(Long, Long)].collect().toMap
-      assert(m === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    } finally comp.unpersist()
+    val comp = Dedup.connectedComponents(m, edges)
+    val got = comp.as[(Long, Long)].collect().toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
 
     // a 100-link path graph (diameter 100): pointer jumping must converge
     // in O(log d) rounds, well under the 25-round cap that plain label
     // propagation would blow through — the boilerplate-dup-chain cliff
     val path = (0L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val pc = Dedup.connectedComponents(path)
-    try {
-      val pm = pc.as[(Long, Long)].collect().toMap
-      assert(pm.size === 101 && pm.values.forall(_ === 0L))
-    } finally pc.unpersist()
+    val pc = Dedup.connectedComponents(m, path)
+    val pm = pc.as[(Long, Long)].collect().toMap
+    assert(pm.size === 101 && pm.values.forall(_ === 0L))
 
     // edge direction must not matter
     val rev = Seq((5L, 2L), (2L, 9L)).toDF("id_a", "id_b")
-    val rc = Dedup.connectedComponents(rev)
-    try assert(rc.as[(Long, Long)].collect().toMap.values.toSet === Set(2L))
-    finally rc.unpersist()
+    val rc = Dedup.connectedComponents(m, rev)
+    assert(rc.as[(Long, Long)].collect().toMap.values.toSet === Set(2L))
   }
 
   test("sequence packing: offsets tile each (lang, shard) stream gaplessly") {
@@ -1713,7 +1708,7 @@ class OpsSpec extends AnyFunSuite {
     assert(out.forall(r => r._6 >= 0 && r._6 < 256))
   }
 
-  test("nearDupPairsAt: one-knob dedupe finds planted near-dups and skips distinct docs") {
+  scopedTest("nearDupPairsAt: one-knob dedupe finds planted near-dups and skips distinct docs") { m =>
     val base = "the quick brown fox jumps over the lazy dog near the riverbank every morning " +
       "while birds sing in the tall green trees beside the water"
     val docs = Seq(
@@ -1725,13 +1720,13 @@ class OpsSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
       .withColumn("ws", Dedup.wordsArray("text"))
       .withColumn("shs", Dedup.wordShingles("ws", 3))
-    val pairs = Dedup.nearDupPairsAt(docs, "doc_id", "shs", threshold = 0.5, nHashes = 32)
+    val pairs = Dedup.nearDupPairsAt(m, docs, "doc_id", "shs", threshold = 0.5, nHashes = 32)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)) && pairs.contains((0L, 3L)))
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
   }
 
-  test("dupGramCoverage: exact copies score 1.0, unique docs 0.0, short docs 0 grams") {
+  scopedTest("dupGramCoverage: exact copies score 1.0, unique docs 0.0, short docs 0 grams") { m =>
     val docs = Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta"),
       (1L, "alpha beta gamma delta epsilon zeta eta"), // exact copy of 0
@@ -1740,7 +1735,7 @@ class OpsSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
       .withColumn("ws", Dedup.wordsArray("text"))
       .withColumn("shs", Dedup.wordShingles("ws", 5))
-    val out = Dedup.dupGramCoverage(docs, "doc_id", "shs")
+    val out = Dedup.dupGramCoverage(m, docs, "doc_id", "shs")
       .as[(Long, Double, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(out(0L) === ((1.0, 3L)) && out(1L) === ((1.0, 3L)))
     assert(out(2L) === ((0.0, 4L)))
@@ -2023,7 +2018,7 @@ class OpsSpec extends AnyFunSuite {
     assert(ZOrder.read(spark, dir, wide).count() === baseline)
   }
 
-  test("dupGramCoverage: solo-gram inversion equals brute force on random corpora") {
+  scopedTest("dupGramCoverage: solo-gram inversion equals brute force on random corpora") { m =>
     // the r15 join-free shape computes n_cov = n_grams − |count-1 grams
     // owned by the doc|, leaning on wordShingles' per-doc distinctness;
     // cross-validate the whole identity against a brute-force in-memory
@@ -2040,7 +2035,7 @@ class OpsSpec extends AnyFunSuite {
       val df = docs.toDF("doc_id", "text")
         .withColumn("ws", Dedup.wordsArray("text"))
         .withColumn("shs", Dedup.wordShingles("ws", k))
-      val got = Dedup.dupGramCoverage(df, "doc_id", "shs")
+      val got = Dedup.dupGramCoverage(m, df, "doc_id", "shs")
         .as[(Long, Double, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
       // brute force: distinct k-grams per doc, gram -> containing-doc count
       val grams = docs.map { case (id, t) =>
@@ -2066,10 +2061,9 @@ class OpsSpec extends AnyFunSuite {
     // same null-in/empty-out contract as the sibling shingle UDFs.
     val rows = Seq((0L, "a b c d e"), (1L, null: String), (2L, "a b c x y"))
       .toDF("doc_id", "text")
-    val (out, release) = Dedup.spanDedupReleasable(rows, "doc_id", "text", 3)
-    val got = out.orderBy("doc_id")
-      .select($"doc_id", $"n_kept", $"cleaned").as[(Long, Long, String)].collect()
-    release()
+    val got = Materialize(m => Dedup.spanDedup(m, rows, "doc_id", "text", 3)
+      .orderBy("doc_id")
+      .select($"doc_id", $"n_kept", $"cleaned").as[(Long, Long, String)].collect())
     assert(got(1) === ((1L, 0L, "")), "null text row must survive as empty")
     // the non-null rows still dedup normally around it
     assert(got(0)._2 === 2L && got(2)._2 === 2L)
@@ -2130,15 +2124,17 @@ class OpsSpec extends AnyFunSuite {
     val rows = Seq(
       (0L, ("word " * 25).trim),
       (1L, null: String)).toDF("doc_id", "text")
-    val (st, release) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text")
-    assert(st.corpus.count() === 2L && st.quality.count() === 1L)
-    assert(st.decontaminated.select("doc_id").as[Long].collect() === Seq(0L))
-    release()
+    Materialize { m =>
+      val st = CleanCorpus.cleanCorpus(m, rows, "doc_id", "text")
+      assert(st.corpus.count() === 2L && st.quality.count() === 1L)
+      assert(st.decontaminated.select("doc_id").as[Long].collect() === Seq(0L))
+    }
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val (st0, release0) = CleanCorpus.cleanCorpusReleasable(empty, "doc_id", "text",
-      isHoldout = Some($"doc_id" === 0))
-    assert(st0.decontaminated.count() === 0L)
-    release0()
+    Materialize { m =>
+      val st0 = CleanCorpus.cleanCorpus(m, empty, "doc_id", "text",
+        isHoldout = Some($"doc_id" === 0))
+      assert(st0.decontaminated.count() === 0L)
+    }
   }
 
   test("cleanCorpus funnel: hand-computed stage counts, preserved schema, released blocks") {
@@ -2174,26 +2170,28 @@ class OpsSpec extends AnyFunSuite {
         "violet crimson scarlet thunder lightning breeze gale cyclone " +
         "typhoon monsoon drizzle sleet")).toDF("doc_id", "text")
     val floor = spark.sparkContext.parallelize(Seq(0), 1).id
-    val (st, release) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text",
-      isHoldout = Some($"doc_id" === 5))
-    assert(st.corpus.count() === 7L)
-    assert(st.quality.count() === 6L)
-    assert(st.exactDeduped.count() === 5L)
-    assert(st.nearDeduped.count() === 4L)
-    val fin = st.decontaminated.select("doc_id").as[Long].collect().sorted
-    assert(fin === Seq(0L, 3L))
-    // every stage frame keeps the INPUT schema — no internal columns leak
-    for (f <- Seq(st.quality, st.exactDeduped, st.nearDeduped, st.decontaminated))
-      assert(f.columns.toSeq === Seq("doc_id", "text"))
-    // the one release handle drops every block the funnel cached
-    release()
+    Materialize { m =>
+      val st = CleanCorpus.cleanCorpus(m, rows, "doc_id", "text",
+        isHoldout = Some($"doc_id" === 5))
+      assert(st.corpus.count() === 7L)
+      assert(st.quality.count() === 6L)
+      assert(st.exactDeduped.count() === 5L)
+      assert(st.nearDeduped.count() === 4L)
+      val fin = st.decontaminated.select("doc_id").as[Long].collect().sorted
+      assert(fin === Seq(0L, 3L))
+      // every stage frame keeps the INPUT schema — no internal columns leak
+      for (f <- Seq(st.quality, st.exactDeduped, st.nearDeduped, st.decontaminated))
+        assert(f.columns.toSeq === Seq("doc_id", "text"))
+    }
+    // closing the scope dropped every block the funnel cached
     val left = spark.sparkContext.getPersistentRDDs.keys.filter(_ >= floor)
     assert(left.isEmpty, s"funnel leaked persisted blocks: ${left.mkString(",")}")
     // no holdout predicate -> decontamination is the identity on stage 4
-    val (st2, release2) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text")
-    assert(st2.decontaminated.select("doc_id").as[Long].collect().sorted ===
-      Seq(0L, 3L, 5L, 6L))
-    release2()
+    Materialize { m =>
+      val st2 = CleanCorpus.cleanCorpus(m, rows, "doc_id", "text")
+      assert(st2.decontaminated.select("doc_id").as[Long].collect().sorted ===
+        Seq(0L, 3L, 5L, 6L))
+    }
 
     // oversized-holdout safety (r15 ADVICE): decontamination carries NO
     // forced broadcast hint — AQE sizes the holdout side at runtime, so a
@@ -2201,22 +2199,23 @@ class OpsSpec extends AnyFunSuite {
     // hint's absence in the optimized plan (a ResolvedHint would survive
     // to the join strategy as a requirement; its absence leaves the
     // decision to AQE's size estimate).
-    val (st3, release3) = CleanCorpus.cleanCorpusReleasable(rows, "doc_id", "text",
-      isHoldout = Some($"doc_id" === 5))
-    val plan = st3.decontaminated.queryExecution.optimizedPlan.toString
-    // a broadcast() hint survives optimization as the join's
-    // "rightHint=(strategy=broadcast)" field (EliminateResolvedHint folds
-    // the hint node into the join). Other funnel joins carry their own
-    // MEASURED broadcasts (the routed verify's pair join) — pin only the
-    // shingle-contamination join: the line joining on _sh must carry no
-    // forced strategy.
-    val shJoin = plan.linesIterator
-      .filter(l => l.contains("Join") && l.contains("_sh#")).toSeq
-    assert(shJoin.nonEmpty, s"expected a _sh contamination join in:\n$plan")
-    assert(shJoin.forall(l => !l.contains("strategy=broadcast")),
-      s"decontamination must not force a broadcast — AQE routes by measured size: $shJoin")
-    assert(st3.decontaminated.select("doc_id").as[Long].collect().sorted ===
-      Seq(0L, 3L))
-    release3()
+    Materialize { m =>
+      val st3 = CleanCorpus.cleanCorpus(m, rows, "doc_id", "text",
+        isHoldout = Some($"doc_id" === 5))
+      val plan = st3.decontaminated.queryExecution.optimizedPlan.toString
+      // a broadcast() hint survives optimization as the join's
+      // "rightHint=(strategy=broadcast)" field (EliminateResolvedHint folds
+      // the hint node into the join). Other funnel joins carry their own
+      // MEASURED broadcasts (the routed verify's pair join) — pin only the
+      // shingle-contamination join: the line joining on _sh must carry no
+      // forced strategy.
+      val shJoin = plan.linesIterator
+        .filter(l => l.contains("Join") && l.contains("_sh#")).toSeq
+      assert(shJoin.nonEmpty, s"expected a _sh contamination join in:\n$plan")
+      assert(shJoin.forall(l => !l.contains("strategy=broadcast")),
+        s"decontamination must not force a broadcast — AQE routes by measured size: $shJoin")
+      assert(st3.decontaminated.select("doc_id").as[Long].collect().sorted ===
+        Seq(0L, 3L))
+    }
   }
 }

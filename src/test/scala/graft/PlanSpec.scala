@@ -8,7 +8,7 @@ import graft.queries.Registry
 /** Physical-plan regression guards: the scale properties argued in the
   * README (pushdown, broadcast, top-k without global sort) must be visible
   * in the executed plan, not just intended. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with ScopedTests {
 
   private lazy val spark = GraftSession.local(4)
   private val dir = "/root/testdata/sf0.001"
@@ -297,7 +297,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("LSH verify stage routes the pair list by measured count, never an unbounded forced broadcast") {
+  scopedTest("LSH verify stage routes the pair list by measured count, never an unbounded forced broadcast") { m =>
     // ops/Dedup.routedPairJoin: below the threshold the pair list is a
     // forced broadcast (big sides never shuffle); above it the SAME join
     // must run as a shuffle join on the pair keys — an oversized forced
@@ -316,10 +316,10 @@ class PlanSpec extends AnyFunSuite {
       val docs = (0 until 30).map(i => (i.toLong, Seq(s"a$i", s"b${i % 3}")))
         .toDF("doc_id", "shs")
       val pairs = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
-      val below = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs")
+      val below = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs")
         .queryExecution.executedPlan.toString
       assert(below.contains("BroadcastHashJoin"), below.take(2000))
-      val above = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs",
+      val above = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs",
           maxBroadcastPairs = 0L)
         .queryExecution.executedPlan.toString
       assert(!above.contains("BroadcastExchange"), above.take(2000))
@@ -329,7 +329,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("verify-leg exchanges carry 64-bit-hashed shingles, not the strings") {
+  scopedTest("verify-leg exchanges carry 64-bit-hashed shingles, not the strings") { m =>
     // the r12 payload-width fix: jaccardOnPairs must project the shingle
     // arrays to xxhash64 longs BEFORE the join, so the (shuffle-route)
     // exchanges move 8-byte elements instead of 5-gram strings — the
@@ -343,7 +343,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = (0 until 20).map(i => (i.toLong, Seq(s"a$i", s"b${i % 3}")))
       .toDF("doc_id", "shs")
     val pairs = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
-    val verified = Dedup.jaccardOnPairs(pairs, docs, "doc_id", "shs",
+    val verified = Dedup.jaccardOnPairs(m, pairs, docs, "doc_id", "shs",
       maxBroadcastPairs = 0L) // force the shuffle route (payload exchanges)
     // the OPTIMIZED logical plan (the executed plan is an AQE wrapper whose
     // children only materialize at runtime): the join inputs' _shs_a/_shs_b
@@ -362,7 +362,7 @@ class PlanSpec extends AnyFunSuite {
     assert(verified.count() >= 0) // the routed plan still executes
   }
 
-  test("posting-route verify plan carries no per-pair signature arrays") {
+  scopedTest("posting-route verify plan carries no per-pair signature arrays") { m =>
     // r13: when jaccardOnPairsRouted takes the posting route, the plan's
     // defining property is that NO exchange duplicates a doc's hashed
     // array per pair — the _shs arrays exist only up to the explode into
@@ -376,7 +376,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = (0 until 20).map(i => (i.toLong, Seq(s"a$i", s"b${i % 3}")))
       .toDF("doc_id", "shs")
     val pairs = Seq((1L, 2L), (3L, 4L), (1L, 4L)).toDF("id_a", "id_b")
-    val routed = Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
+    val routed = Dedup.jaccardOnPairsRouted(m, pairs, docs, "doc_id", "shs",
       postingFactor = 0.0) // force the posting route
     val plan = routed.queryExecution.optimizedPlan
     val attrs = plan.flatMap(_.output)
@@ -392,12 +392,12 @@ class PlanSpec extends AnyFunSuite {
       a.dataType.asInstanceOf[ArrayType].elementType !== StringType,
       "candidate projection carries string shingles"))
     // both routes still execute and agree on this toy input
-    val viaCarry = Dedup.jaccardOnPairsRouted(pairs, docs, "doc_id", "shs",
+    val viaCarry = Dedup.jaccardOnPairsRouted(m, pairs, docs, "doc_id", "shs",
       postingFactor = 1e18)
     assert(routed.collect().toSet === viaCarry.collect().toSet)
   }
 
-  test("delta-dedup candidate-id semi-join routes by measured count like the pair join") {
+  scopedTest("delta-dedup candidate-id semi-join routes by measured count like the pair join") { m =>
     // ops/Dedup.routedSemiJoin: the shape d_delta_dedup (and the streaming
     // twin) uses to restrict shingling to candidate-touched docs. Same
     // discipline as routedPairJoin — broadcast only a counted-bounded id
@@ -414,10 +414,10 @@ class PlanSpec extends AnyFunSuite {
       import spark.implicits._
       val docs = (0 until 30).map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")
       val ids = Seq(1L, 4L, 9L).toDF("doc_id")
-      val below = Dedup.routedSemiJoin(docs, ids, "doc_id")
+      val below = Dedup.routedSemiJoin(m, docs, ids, "doc_id")
         .queryExecution.executedPlan.toString
       assert(below.contains("BroadcastHashJoin"), below.take(2000))
-      val above = Dedup.routedSemiJoin(docs, ids, "doc_id",
+      val above = Dedup.routedSemiJoin(m, docs, ids, "doc_id",
           maxBroadcastPairs = 0L)
         .queryExecution.executedPlan.toString
       assert(!above.contains("BroadcastExchange"), above.take(2000))

@@ -6,11 +6,12 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Engine
-import graft.core.GraftSession
+import graft.core.{GraftSession, Materialize}
 
 /** Engine-session SOAK (VERDICT r12 ask #5): the lifecycle hygiene work —
-  * release handles on every routed/posting join, named result dirs,
-  * refresh-per-batch index stores — is spec-pinned piecewise; this drives
+  * every persist and checkpoint owned by a `Materialize` scope that frees
+  * it on close, named result dirs, refresh-per-batch index stores — is
+  * spec-pinned piecewise; this drives
   * one LONG-LIVED engine through repeated mixed-workload cycles
   * (mutate → sync → query mix → dedup scan → delete → re-sync) and asserts
   * the three session-level invariants end-to-end:
@@ -26,7 +27,13 @@ import graft.core.GraftSession
   *
   * Cycle count is small (5) because every invariant is asserted PER CYCLE —
   * a leak of even one cached block or one un-swapped store dir fails on its
-  * first occurrence, not after an hour. */
+  * first occurrence, not after an hour.
+  *
+  * The same block gate covers the library paths a long-lived session runs
+  * outside the engine — the cleaning funnel, the delta-cleaning protocol
+  * (applyBatch → absorb) and its streaming twin — and the failure paths:
+  * an operator that throws after materializing must leave nothing behind
+  * once its scope closes. */
 class SoakSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)
@@ -214,7 +221,7 @@ class SoakSpec extends AnyFunSuite {
     // VERDICT r14 ask #5: the funnel's two stage caches plus its routed
     // verify's persists are exactly the class this soak exists to gate.
     // Drive the ops-level API (not the benchmark query) through repeated
-    // build→consume→release cycles under both verify knobs — any cycle
+    // build→consume→close cycles under both verify knobs — any cycle
     // that strands even one block fails immediately.
     import org.apache.spark.sql.functions.col
     import graft.ops.CleanCorpus
@@ -241,19 +248,120 @@ class SoakSpec extends AnyFunSuite {
         val floor = blockFloor()
         var expected = -1L
         for (cycle <- 1 to 3) {
-          val (st, release) = CleanCorpus.cleanCorpusReleasable(
-            corpus, "doc_id", "text",
-            isHoldout = Some(col("doc_id") % 13 === 0))
-          val n = st.decontaminated.count()
-          assert(n > 0, s"funnel produced no survivors (knob=$knob)")
-          if (expected < 0) expected = n
-          else assert(n === expected, s"cycle $cycle drifted (knob=$knob)")
-          release()
+          Materialize { m =>
+            val st = CleanCorpus.cleanCorpus(m, corpus, "doc_id", "text",
+              isHoldout = Some(col("doc_id") % 13 === 0))
+            val n = st.decontaminated.count()
+            assert(n > 0, s"funnel produced no survivors (knob=$knob)")
+            if (expected < 0) expected = n
+            else assert(n === expected, s"cycle $cycle drifted (knob=$knob)")
+          }
           val left = blocksSince(floor)
           assert(left.isEmpty,
             s"cleanCorpus cycle $cycle (knob=$knob) leaked blocks: ${left.mkString(",")}")
         }
       } finally spark.conf.unset("spark.graft.dedup.postingVerifyFactor")
     }
+  }
+
+  /** funnel corpus for the delta-protocol gates: every 5th doc is the same
+    * 24 words with a distinct punctuation suffix (exact-dedup survivors,
+    * verified near-dups of each other), the rest carry doc-unique vocab */
+  private def deltaDocs(ids: Seq[Long]): org.apache.spark.sql.DataFrame = {
+    val session = spark
+    import session.implicits._
+    val groupText = (0 until 24).map(j => s"group word g$j").mkString(" ")
+    ids.map { i =>
+      val text =
+        if (i % 5 == 0) groupText + " " + ("!" * ((i / 5) % 6 + 1).toInt)
+        else s"document $i delta soak token zz$i " +
+          (0 until 20).map(j => s"w${i}x$j").mkString(" ")
+      (i, text)
+    }.toDF("doc_id", "text")
+  }
+
+  private val deltaHold = org.apache.spark.sql.functions.col("doc_id") % 13 === 0
+
+  private def rootMessages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+
+  test("delta protocol: applyBatch → absorb → close cycles leave no blocks, checkpoints included") {
+    // absorb's phase-1 snapshots and the index probe are eager
+    // checkpoints, whose blocks Dataset.unpersist never sees — each cycle
+    // used to strand 7 checkpoint RDDs. The scope frees them; the census
+    // counts checkpoint RDDs like any persisted RDD.
+    val st = new graft.store.CleanStateStore(spark,
+      Files.createTempDirectory("soak-delta").toString + "/state")
+    var full = deltaDocs(0L until 30L)
+    st.rebuild(full, deltaHold)
+    val floor = blockFloor()
+    for (cycle <- 1 to 3) {
+      val batch = deltaDocs((0L until 12L).map(_ + 100L * cycle))
+      full = full.union(batch)
+      Materialize(m => st.absorb(st.applyBatch(m, batch, full, deltaHold)))
+      val left = blocksSince(floor)
+      assert(left.isEmpty, s"delta cycle $cycle leaked blocks: ${left.mkString(",")}")
+    }
+    assert(st.stageCounts()._1 === 66L, "every cycle's batch must be absorbed")
+  }
+
+  test("streaming delta-clean funnel leaves no blocks, checkpoints included") {
+    // the e_stream_pipeline path: foreachBatch runs applyBatch → absorb
+    // per micro-batch against an empty-bootstrapped state store
+    val floor = blockFloor()
+    val survivors = graft.streaming.StreamingIngest.cleanPipelineAvailableNow(
+      spark, deltaDocs(0L until 40L), deltaHold, numFiles = 3)
+    assert(survivors.count() > 0)
+    val left = blocksSince(floor)
+    assert(left.isEmpty, s"streaming funnel leaked blocks: ${left.mkString(",")}")
+  }
+
+  test("absorb: a failing phase-1 snapshot rethrows, leaves no blocks and no state change") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val st = new graft.store.CleanStateStore(spark,
+      Files.createTempDirectory("soak-absorb-fail").toString + "/state")
+    val stored = deltaDocs(0L until 30L)
+    st.rebuild(stored, deltaHold)
+    val before = st.stageCounts()
+    val batch = deltaDocs(100L until 112L)
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("injected snapshot failure")
+      id
+    }
+    val floor = blockFloor()
+    val err = intercept[Exception] {
+      Materialize { m =>
+        val r = st.applyBatch(m, batch, stored.union(batch), deltaHold)
+        // the revoked snapshot's checkpoint job throws; its sibling
+        // snapshots complete and hold checkpoint blocks until the scope
+        // closes
+        st.absorb(r.copy(revoked = r.revoked
+          .union(spark.range(1).select(boom(col("id")).as("doc_id")))))
+      }
+    }
+    assert(rootMessages(err).exists(_.contains("injected snapshot failure")), err)
+    val left = blocksSince(floor)
+    assert(left.isEmpty, s"failed absorb leaked blocks: ${left.mkString(",")}")
+    assert(st.stageCounts() === before, "a phase-1 failure must not touch the state")
+  }
+
+  test("an operator that throws after persisting leaves nothing once its scope closes") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("injected count failure")
+      id
+    }
+    val docs = deltaDocs(0L until 10L)
+    val floor = blockFloor()
+    // routedSemiJoin persists the id set, then counts it to pick the join
+    // route — the count fails here, after the persist
+    val err = intercept[Exception] {
+      Materialize(m => graft.ops.Dedup.routedSemiJoin(m, docs,
+        spark.range(3).select(boom(col("id")).as("doc_id")), "doc_id"))
+    }
+    assert(rootMessages(err).exists(_.contains("injected count failure")), err)
+    val left = blocksSince(floor)
+    assert(left.isEmpty, s"failed operator leaked blocks: ${left.mkString(",")}")
   }
 }

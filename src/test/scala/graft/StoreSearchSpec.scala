@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ChunkSchema.{ChunkMetadata, ChunkRow}
-import graft.core.GraftSession
+import graft.core.{GraftSession, Materialize}
 import graft.embed.HashedEmbedder
 import graft.ingest.Ingest
 import graft.search.{Bm25, HybridSearch, VectorSearch}
@@ -489,7 +489,8 @@ class StoreSearchSpec extends AnyFunSuite {
     st.rebuild(stored)
     assert(st.exists && st.rowCount() === 3)
 
-    val delta = st.deltaCandidates(batch).as[(Long, Long)].collect().toSet
+    val delta = Materialize(m => st.deltaCandidates(m, batch)
+      .as[(Long, Long)].collect().toSet)
     // ground truth: band the UNION corpus, keep candidate pairs with a batch side
     val union = stored.union(batch)
       .withColumn("ws", Dedup.wordsArray("text"))
@@ -532,7 +533,8 @@ class StoreSearchSpec extends AnyFunSuite {
 
     // a batch equal to doc 1's text must now find doc 0 as a candidate
     val probe = Seq((100L, s"doc 1 $base tail 1")).toDF("doc_id", "text")
-    val cands = st.deltaCandidates(probe).as[(Long, Long)].collect().toSet
+    val cands = Materialize(m => st.deltaCandidates(m, probe)
+      .as[(Long, Long)].collect().toSet)
     assert(cands.contains((0L, 100L)) && cands.contains((1L, 100L)))
     st.drop()
   }

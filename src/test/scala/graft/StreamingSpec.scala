@@ -197,12 +197,12 @@ class StreamingSpec extends AnyFunSuite {
     val withSig = shingled.filter(org.apache.spark.sql.functions.size(col("shs")) > 0)
       .withColumn("hs", graft.ops.Dedup.shingleBaseHashes("shs"))
       .withColumn("sig", graft.ops.Dedup.minhashSignature("hs", 16))
-    val oneShot = graft.ops.Dedup.jaccardOnPairs(
+    val oneShot = graft.core.Materialize(m => graft.ops.Dedup.jaccardOnPairs(m,
         graft.ops.Dedup.lshCandidatePairs(
           graft.ops.Dedup.lshBands(withSig, "doc_id", "sig", 4, 4), "doc_id"),
         shingled, "doc_id", "shs")
       .filter(col("jaccard") >= 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(got === oneShot)
     assert(got.contains((0L, 20L)), "cross-batch exact dup not found via index state")
     assert(got.contains((0L, 10L)), "cross-batch near dup not found via index state")

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * glob, schema memoized, and an EMPTY probe answers with an empty frame
   * of the table schema instead of a full-table fallback read). Pin the
   * semantics: probed values read only their directories; values absent
-  * from the layout yield zero rows with the FULL table schema (callers
-  * select/filter by name on the result). */
+  * from the layout, or no values at all, yield zero rows with the FULL
+  * table schema (callers select/filter by name on the result); values
+  * that are not integral ids never reach the glob. */
 class PrunedReadSpec extends AnyFunSuite {
 
   private final class Fixture(
@@ -47,5 +48,15 @@ class PrunedReadSpec extends AnyFunSuite {
     assert(none.count() === 0L)
     assert(none.columns.toSet === Set("id", "part", "payload"))
     assert(none.filter(col("part").isin(98, 99)).select("id").count() === 0L)
+
+    // NO values: straight to the same zero-row frame, no `{}` glob listed
+    val noValues = fx.readValues(table, "part", Seq.empty)
+    assert(noValues.count() === 0L)
+    assert(noValues.columns.toSet === Set("id", "part", "payload"))
+
+    // non-integral values are rejected before they reach the glob, where
+    // a `*` would widen the probe to every partition
+    intercept[IllegalArgumentException](fx.readValues(table, "part", Seq(10, "*")))
+    intercept[IllegalArgumentException](fx.readValues(table, "part", Seq(1.5)))
   }
 }
